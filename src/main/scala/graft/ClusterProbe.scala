@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Measurement harness (dev-only, like PerfProbe/ScaleUp): the
+/** Measurement harness (dev-only, like ScaleUp/ScaleSmoke): the
   * MULTI-JVM smoke for every driver-vs-executor memory inference in the
   * engine (r15 verdict item 5). All declared runs use `local[n]`, where
   * the driver JVM IS the executor — so a rule that accidentally read

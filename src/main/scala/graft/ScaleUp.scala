@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Measurement harness (like PerfProbe/ScaleSmoke — never part of a
+/** Measurement harness (like ScaleSmoke/RecallSweep — never part of a
   * declared query): replicate a driver testdata directory `factor`× into
   * a local target dir so the full declared-query surface can be benched
   * at 10× the driver's largest SF with the REAL table shapes, not

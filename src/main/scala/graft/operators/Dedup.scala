@@ -265,39 +265,6 @@ object Dedup {
         s"stack($k, $stackArgs) AS (seed, minhash)")
   }
 
-  /** LSH banding: bucket key per (doc, band) = md5 of the band's ordered
-    * minhash vector. Docs sharing any bucket are candidate pairs.
-    * Accepts the NARROW signature form (external/SQL surface); the
-    * in-band vector is pivoted with per-slot conditional MIN (exactly
-    * one seed hits each slot) — a plain codegen'd HashAggregate.
-    * [[minhashLshPairs]] uses [[bucketsFromWide]] instead, which needs no
-    * aggregate at all.
-    */
-  def lshBuckets(signatures: DataFrame, rowsPerBand: Int = 4): DataFrame = {
-    require(rowsPerBand >= 1,
-      s"rowsPerBand ($rowsPerBand) must be >= 1")
-    val slots = (0 until rowsPerBand).map { j =>
-      min(when(expr(s"seed % $rowsPerBand") === j, col("minhash")))
-        .cast("string")
-    }
-    // drop PARTIAL trailing bands (k % rowsPerBand ≠ 0): bucketsFromWide
-    // builds exactly k/rowsPerBand full bands, and a partial band here
-    // would (a) diverge from the wide form / persisted corpus state on
-    // the same parameters and (b) leave null slots that concat_ws
-    // silently skips, merging distinct band vectors into one bucket key.
-    // The guard counts NON-NULL minhash values, not rows: a NULL
-    // signature inside a nominally full band is exactly hazard (b) — a
-    // row count would pass it through and collapse distinct band
-    // vectors into one bucket. Within a full all-non-null band, seeds
-    // b·r..b·r+r−1 hit each slot exactly once.
-    signatures
-      .groupBy(col("doc_id"), expr(s"seed div $rowsPerBand").as("band"))
-      .agg(md5(concat_ws(",", slots: _*)).as("bucket"),
-        count(col("minhash")).as("__nseeds"))
-      .filter(col("__nseeds") === rowsPerBand)
-      .drop("__nseeds")
-  }
-
   /** Band buckets from the wide signature row — a pure PROJECTION
     * (stack of per-band md5s), no shuffle beyond the signature aggregate
     * itself.

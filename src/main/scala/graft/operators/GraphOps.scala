@@ -304,7 +304,7 @@ object GraphOps {
     * neighborhoods are out-adjacency, so the per-edge work is O(√m)
     * under ANY skew, and — unlike the classic wedge/semi-join form —
     * the O(m^1.5) wedge set is never materialized: at sf0.1 that was
-    * 41 M wedge rows and 6 s of a 7.5 s query (PerfProbe breakdown);
+    * 41 M wedge rows and 6 s of a 7.5 s query (round-7 breakdown);
     * the intersection core runs in under 1 s for the identical count.
     * The total is independent of the orientation key — the DuckDB
     * oracle uses plain id-orientation and must produce the identical
@@ -330,8 +330,8 @@ object GraphOps {
   /** The co-purchase edge list (id-canonical distinct `(u, v)`, u < v):
     * parts linked by appearing on the same order. One exchange (the
     * per-order `collect_set`) + the partial-combined distinct; exposed so
-    * the probes and GraphSpec exercise [[triangleCountEdges]] on exactly
-    * the shipped build instead of re-deriving it.
+    * GraphSpec exercises [[triangleCountEdges]] on exactly the shipped
+    * build instead of re-deriving it.
     *
     * The build runs BEFORE [[triangleCountEdges]]' Σdeg peek can exist,
     * so its width rule peeks the input instead: |lineitem| is a
@@ -376,10 +376,9 @@ object GraphOps {
     * ≲64 MB at the cap); under it, both attaches broadcast and the
     * whole count pipelines in one stage over the materialized edge
     * list. Beyond the cap (a 100 TB-scale graph) the attaches become
-    * shuffled node-keyed joins (or, with `wedgeClose`, the relational
-    * wedge form) — AQE skew-splits them like any other node-keyed join,
-    * and every materialization switches to DISK_ONLY (see the
-    * [[triangleCountEdges]] post-mortem).
+    * shuffled node-keyed joins — AQE skew-splits them like any other
+    * node-keyed join, and every materialization switches to
+    * DISK_ONLY (see the [[triangleCountEdges]] post-mortem).
     */
   private val BroadcastEdgeLimit = 4000000L
 
@@ -394,25 +393,9 @@ object GraphOps {
     * derived default) drives the
     * same |E|-proportional exchange-width rule as [[pageRankEdges]],
     * applied to every edge-sized exchange downstream of the Σdeg peek
-    * (degree attaches, adjacency aggregate, attach joins, wedge
-    * joins); identity at-or-below the session width, parameterized
-    * only so GraphSpec can force the widened plan on a toy graph. `wedgeClose`
-    * selects the above-cap strategy: false (default) keeps the
-    * adjacency-array intersection with shuffled attaches; true uses the
-    * pure relational wedge form (oriented ⋈ oriented on src, closing
-    * inner join against the id-canonical edge list) — no array
-    * aggregation at all, every operator sort-merge + spillable. Both
-    * exchange Θ(Σ outdeg²) data above the cap (the intersection path
-    * re-shuffles the attached N⁺(u) arrays on dst for the second
-    * attach; the wedge path shuffles the wedge rows themselves) — but
-    * NOT at the same constant: measured head-to-head at factor 100
-    * (SCALE.md r13), the intersection default completes in 198 s while
-    * the wedge form exhausted ~50 GB of spill and died in the closing
-    * join's external sort — the wedge path pays per-ROW shuffle-write
-    * + sort cost for every one of the ~4.1 G wedges where the
-    * intersection path carries the same data as array payloads on m
-    * edge rows. `wedgeClose` is kept as the no-arrays fallback (and
-    * correctness-pinned in GraphSpec), not as a recommendation.
+    * (degree attaches, adjacency aggregate, attach joins); identity
+    * at-or-below the session width, parameterized only so GraphSpec can
+    * force the widened plan on a toy graph.
     *
     * MEMORY POST-MORTEM (r12, factor-100 sweep): with the former
     * MEMORY_AND_DISK `localCheckpoint`s this pipeline OOM'd outright at
@@ -429,7 +412,6 @@ object GraphOps {
     */
   def triangleCountEdges(edges0: DataFrame,
       broadcastEdgeLimit: Long = BroadcastEdgeLimit,
-      wedgeClose: Boolean = false,
       rowsPerPartition: Long = 0L): DataFrame = {
     // materialize the (possibly expensive) edge build ONCE — without
     // this, each of {degree agg, u-attach, v-attach} replays the full
@@ -480,7 +462,7 @@ object GraphOps {
     // |V| < 2^31 (the ordinal must fit an int — node ids themselves
     // may be arbitrary longs); past that the path falls back to plain
     // long ids without the prune, keeping the same join topology.
-    val rankable = big && !wedgeClose && nNodes > 0 && nNodes < (1L << 31)
+    val rankable = big && nNodes > 0 && nNodes < (1L << 31)
     // |E|-proportional width for every edge-sized exchange BELOW this
     // point (the [[pageRankEdges]] rule, extended here in r14): the
     // adjacency collect_list and the attach joins each hold
@@ -558,113 +540,82 @@ object GraphOps {
     val oriented = if (big)
       orientedPlan().localCheckpoint(true, StorageLevel.DISK_ONLY)
     else orientedPlan().localCheckpoint()
-    val nTriangles: DataFrame = if (big && wedgeClose) {
-      // relational wedge form: per apex a, each ordered pair of its
-      // out-neighbors (b, c) with b < c by id is a wedge; it closes a
-      // triangle iff {b, c} is an edge. The membership side is
-      // id-canonicalized IN the branch (least/greatest — a no-op
-      // projection on already-canonical u < v rows), because unlike the
-      // adjacency path, whose rank orientation re-derives direction per
-      // row, a verbatim join against `edges` would silently miss any
-      // row a caller supplied in (hi, lo) orientation (r13 ADVICE).
-      // One inner join on both keys then tests membership exactly once
-      // per wedge. Counted once per triangle at its min-RANK apex
-      // (uniqueness comes from the orientation of a→b, a→c; the
-      // id-order on (b, c) merely canonicalizes the pair to match the
-      // membership side). Every operator here is sort-merge + hash-agg
-      // with spill; nothing holds O(√m) arrays.
-      val orientedW = widen(oriented, col("src"))
-      // shuffle-hash hints (r17): the wedge stream is Θ(Σ outdeg²)
-      // rows — a sort-merge closing join externally SORTS it (the r13
-      // 50 GB spill death); with the m-row edge side as the hash build
-      // the wedge stream only streams. Same for the self-join (build =
-      // one |E|/width slice of bare pairs per task).
-      val w = orientedW.as("e1")
-        .join(orientedW.as("e2").hint("shuffle_hash"),
-          col("e1.src") === col("e2.src") && col("e1.dst") < col("e2.dst"))
-        .select(col("e1.dst").as("u"), col("e2.dst").as("v"))
-      val canonical = edges.select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      widen(w, col("u"), col("v"))
-        .join(canonical.hint("shuffle_hash"), Seq("u", "v"))
-        .agg(count(lit(1)).as("n_triangles"))
+    // node-sized out-adjacency arrays (each O(√m) long by
+    // orientation), materialized because both attaches below read it;
+    // array-carrying and therefore DISK_ONLY above the cap.
+    // Above the cap the arrays are SORTED: the dst exchange below is
+    // the query's disk bill (23.5 GB at factor 100 — r17 StageProbe),
+    // and codec ratio on packed (deg<<32|id) longs is locality-bound —
+    // sorted runs share high bytes and compress several-fold better
+    // than collect_list's arrival order. Sorting is one node-sized
+    // array sort at build time; array_intersect is order-insensitive,
+    // so results are bit-identical (GraphSpec pins both closing
+    // strategies).
+    val adjPlan = widen(oriented, col("src")).groupBy(col("src"))
+      .agg((if (big) sort_array(collect_list(col("dst")))
+        else collect_list(col("dst"))).as("nbrs"))
+    val adj = if (big) adjPlan.localCheckpoint(true, StorageLevel.DISK_ONLY)
+      else adjPlan.localCheckpoint()
+    val adjU = adj.select(col("src"), col("nbrs").as("nu"))
+    val adjV = adj.select(col("src").as("dst"), col("nbrs").as("nv"))
+    // per oriented edge (u,v): |N⁺(u) ∩ N⁺(v)| common out-neighbors.
+    // Inner joins: v may have no out-edges (rank-maximal) — such edges
+    // close no triangle, and dropping them is exactly the intersection
+    // with an empty set. The adjacency attaches broadcast when the
+    // graph fits ([[BroadcastEdgeLimit]]); the fallback is two shuffled
+    // node-keyed joins at the |E|-proportional width (the second
+    // attach re-shuffles the array-carrying rows on dst — the
+    // heaviest exchange in the query, which is exactly where a fixed
+    // width starves first).
+    val nTriangles: DataFrame = if (big) {
+      // Above-cap path (r17 rewrite — the honest-sink sf30 spill fix;
+      // the broadcast path below is untouched, keeping toy-SF plans
+      // byte-identical). Three levers on the dst exchange, the
+      // query's heaviest:
+      //  1. both attaches are SHUFFLE-HASH joins with the node-sized
+      //     adjacency as the build side (~|E|/width packed longs per
+      //     task): a sort-merge join would externally SORT the
+      //     array-carrying edge stream — re-spilling the Σ outdeg²
+      //     payload the exchange already wrote once;
+      //  2. on the packed path, N⁺(u) is PRUNED to entries ranked
+      //     above dst before the exchange (see `rankable`) — half the
+      //     array bytes never ship;
+      //  3. `src` is dropped before the exchange — the intersection
+      //     needs only (dst, nu).
+      val attached = widen(oriented, col("src"))
+        .join(adjU.hint("shuffle_hash"), Seq("src"))
+      val pruned = if (rankable)
+        attached.select(col("dst"),
+          filter(col("nu"), w => w > col("dst")).as("nu"))
+      else attached.select(col("dst"), col("nu"))
+      widen(pruned, col("dst"))
+        .join(adjV.hint("shuffle_hash"), Seq("dst"))
+        .select(size(array_intersect(col("nu"), col("nv")))
+          .cast("long").as("c"))
+        .agg(coalesce(sum(col("c")), lit(0L)).as("n_triangles"))
     } else {
-      // node-sized out-adjacency arrays (each O(√m) long by
-      // orientation), materialized because both attaches below read it;
-      // array-carrying and therefore DISK_ONLY above the cap.
-      // Above the cap the arrays are SORTED: the dst exchange below is
-      // the query's disk bill (23.5 GB at factor 100 — r17 StageProbe),
-      // and codec ratio on packed (deg<<32|id) longs is locality-bound —
-      // sorted runs share high bytes and compress several-fold better
-      // than collect_list's arrival order. Sorting is one node-sized
-      // array sort at build time; array_intersect is order-insensitive,
-      // so results are bit-identical (GraphSpec pins all strategies).
-      val adjPlan = widen(oriented, col("src")).groupBy(col("src"))
-        .agg((if (big) sort_array(collect_list(col("dst")))
-          else collect_list(col("dst"))).as("nbrs"))
-      val adj = if (big) adjPlan.localCheckpoint(true, StorageLevel.DISK_ONLY)
-        else adjPlan.localCheckpoint()
-      val adjU = adj.select(col("src"), col("nbrs").as("nu"))
-      val adjV = adj.select(col("src").as("dst"), col("nbrs").as("nv"))
-      // per oriented edge (u,v): |N⁺(u) ∩ N⁺(v)| common out-neighbors.
-      // Inner joins: v may have no out-edges (rank-maximal) — such edges
-      // close no triangle, and dropping them is exactly the intersection
-      // with an empty set. The adjacency attaches broadcast when the
-      // graph fits ([[BroadcastEdgeLimit]]); the fallback is two shuffled
-      // node-keyed joins at the |E|-proportional width (the second
-      // attach re-shuffles the array-carrying rows on dst — the
-      // heaviest exchange in the query, which is exactly where a fixed
-      // width starves first).
-      if (big) {
-        // Above-cap path (r17 rewrite — the honest-sink sf30 spill fix;
-        // the broadcast path below is untouched, keeping toy-SF plans
-        // byte-identical). Three levers on the dst exchange, the
-        // query's heaviest:
-        //  1. both attaches are SHUFFLE-HASH joins with the node-sized
-        //     adjacency as the build side (~|E|/width packed longs per
-        //     task): a sort-merge join would externally SORT the
-        //     array-carrying edge stream — re-spilling the Σ outdeg²
-        //     payload the exchange already wrote once;
-        //  2. on the packed path, N⁺(u) is PRUNED to entries ranked
-        //     above dst before the exchange (see `rankable`) — half the
-        //     array bytes never ship;
-        //  3. `src` is dropped before the exchange — the intersection
-        //     needs only (dst, nu).
-        val attached = widen(oriented, col("src"))
-          .join(adjU.hint("shuffle_hash"), Seq("src"))
-        val pruned = if (rankable)
-          attached.select(col("dst"),
-            filter(col("nu"), w => w > col("dst")).as("nu"))
-        else attached.select(col("dst"), col("nu"))
-        widen(pruned, col("dst"))
-          .join(adjV.hint("shuffle_hash"), Seq("dst"))
-          .select(size(array_intersect(col("nu"), col("nv")))
-            .cast("long").as("c"))
-          .agg(coalesce(sum(col("c")), lit(0L)).as("n_triangles"))
-      } else {
-        // Below-cap closing: both attaches broadcast, so the whole
-        // per-edge intersection runs map-side at the `oriented`
-        // checkpoint's partitioning — which is the edge BUILD's output
-        // width (AQE byte-coalesced; 3 partitions at sf0.1). Bytes are
-        // the wrong proxy for the intersection's CPU (sorted-array
-        // intersect per edge), so when the checkpoint has fewer
-        // partitions than the session has slots, round-robin the edge
-        // stream up to the slot count first — a below-cap graph is
-        // ≤ broadcastEdgeLimit rows by construction, so the repartition
-        // is bounded-cheap at ANY deployment, and a checkpoint already
-        // at ≥ slots partitions (every at-scale layout) skips it.
-        // Measured r18 (sf0.1, min-of-5 A/B): 3.69 → 2.93 s.
-        val slots = math.max(1,
-          oriented.sparkSession.sparkContext.defaultParallelism)
-        val probe = if (oriented.rdd.getNumPartitions < slots)
-          oriented.repartition(slots) else oriented
-        widen(widen(probe, col("src"))
-            .join(broadcast(adjU), Seq("src")), col("dst"))
-          .join(broadcast(adjV), Seq("dst"))
-          .select(size(array_intersect(col("nu"), col("nv")))
-            .cast("long").as("c"))
-          .agg(coalesce(sum(col("c")), lit(0L)).as("n_triangles"))
-      }
+      // Below-cap closing: both attaches broadcast, so the whole
+      // per-edge intersection runs map-side at the `oriented`
+      // checkpoint's partitioning — which is the edge BUILD's output
+      // width (AQE byte-coalesced; 3 partitions at sf0.1). Bytes are
+      // the wrong proxy for the intersection's CPU (sorted-array
+      // intersect per edge), so when the checkpoint has fewer
+      // partitions than the session has slots, round-robin the edge
+      // stream up to the slot count first — a below-cap graph is
+      // ≤ broadcastEdgeLimit rows by construction, so the repartition
+      // is bounded-cheap at ANY deployment, and a checkpoint already
+      // at ≥ slots partitions (every at-scale layout) skips it.
+      // Measured r18 (sf0.1, min-of-5 A/B): 3.69 → 2.93 s.
+      val slots = math.max(1,
+        oriented.sparkSession.sparkContext.defaultParallelism)
+      val probe = if (oriented.rdd.getNumPartitions < slots)
+        oriented.repartition(slots) else oriented
+      widen(widen(probe, col("src"))
+          .join(broadcast(adjU), Seq("src")), col("dst"))
+        .join(broadcast(adjV), Seq("dst"))
+        .select(size(array_intersect(col("nu"), col("nv")))
+          .cast("long").as("c"))
+        .agg(coalesce(sum(col("c")), lit(0L)).as("n_triangles"))
     }
     nTriangles.select(lit(nNodes).as("n_nodes"), lit(nEdges).as("n_edges"),
       col("n_triangles"))

@@ -568,7 +568,12 @@ object EventStreams {
     *    joins;
     *  - update-mode aggregate (candles): eviction emits only in APPEND
     *    mode;
-    *  - dropDuplicatesWithinWatermark (dedup): eviction never emits;
+    *  - dropDuplicatesWithinWatermark (dedup): eviction never emits.
+    *    The skip also DELAYS eviction, so a duplicate redelivered
+    *    BEHIND the watermark could still be dropped against retained
+    *    state where eager eviction would re-emit it — the only regime
+    *    where output could differ, and one already outside the
+    *    within-watermark contract (see [[streamDedup]]);
     *  - flatMapGroupsWithState with NoTimeout (ema): the function is
     *    only invoked for keys present in the batch;
     *  - mergeStream: unwatermarked — no no-data batch is scheduled.
@@ -844,11 +849,11 @@ object EventStreams {
     * the factor-300 probe (60 M events, 2 slices = 30 M rows/batch ×
     * two join readers) ran the 8 GiB driver out of heap inside
     * `stream_followups`' interval-join state before the first watermark
-    * advance could evict anything (SCALE.md r15). `slices = 0` (the
-    * declared-query default) derives ⌈|events| / rowsPerSlice⌉ with
-    * rowsPerSlice = 8 M × (heap GiB / 8) — anchored at the measured
-    * cliff: 2×10 M buffered rows survived this host's 8 GiB heap,
-    * 2×30 M died — floored at 2 so every declared fixture keeps the
+    * advance could evict anything (SCALE.md r15). Every drain derives
+    * its slice count as ⌈|events| / rowsPerSlice⌉ with rowsPerSlice =
+    * 8 M × (heap GiB / 8) — anchored at the measured cliff: 2×10 M
+    * buffered rows survived this host's 8 GiB heap, 2×30 M died —
+    * floored at 2 so every declared fixture keeps the
     * exact 2-slice plan (200 k events at sf0.1 is far under one slice)
     * and the cross-batch machinery the drains exist to gate still
     * exercises. The |events| peek is one footer-cheap metadata job,
@@ -875,19 +880,16 @@ object EventStreams {
     math.max(1000000L, (8000000.0 * heapGiB / 8.0).toLong)
   }
 
-  private def autoSlices(spark: SparkSession, dir: String,
-      slices: Int): Int = {
-    if (slices > 0) return slices
+  private def autoSlices(spark: SparkSession, dir: String): Int = {
     val n = graft.Tables.rowCount(spark, dir, "events")
     math.max(2, math.ceil(n.toDouble / rowsPerSliceBound(spark)).toInt)
   }
 
   /** State-store backend for a drain, chosen from the SAME inputs as
     * [[autoSlices]] (expected buffered rows per micro-batch vs worker
-    * heap) so no operator — and no caller forcing a slice geometry —
-    * has to pick a backend by hand. The crossover is the r15
-    * measurement (SCALE.md "state-store backend"), both directions:
-    * the in-memory (HDFS-backed) store is ~4× faster per key but
+    * heap) so no operator has to pick a backend by hand. The crossover
+    * is the r15 measurement (SCALE.md "state-store backend"), both
+    * directions: the in-memory (HDFS-backed) store is ~4× faster per key but
     * keeps all state on-heap — it survived 2×10 M buffered join rows
     * on this 8 GiB heap and died at 2×30 M, where RocksDB (off-heap +
     * disk spill) completed one-pass at 1 122.7 s. So the threshold is
@@ -899,11 +901,11 @@ object EventStreams {
     * untouched. Every auto-derived geometry stays under the threshold
     * by construction ([[autoSlices]] caps a slice at 8 M rows, ≤ 16 M
     * buffered even with two readers), so declared fixtures keep the
-    * exact bytes and plans they always had; only a FORCED oversized
-    * geometry (probe slice overrides, a caller passing slices0 at
-    * cluster scale) trips the switch. An EXPLICIT session conf always
-    * wins — auto never overwrites a deployment's choice (or a probe's
-    * override), it only fills the unset case.
+    * exact bytes and plans they always had; only a point-mass slice
+    * (one [[writeTimeSlices]] sub-bucket holding more than the row cap,
+    * which capRows cannot split) trips the switch. An EXPLICIT session
+    * conf always wins — auto never overwrites a deployment's choice, it
+    * only fills the unset case.
     */
   private[graft] def autoBackend(spark: SparkSession,
       bufferedRowsPerBatch: Long): Option[String] = {
@@ -947,12 +949,9 @@ object EventStreams {
     * of the uniform rowCount/slices quotient (r16 ADVICE): equal-TIME
     * windows with capRows sub-splitting can leave ONE point-mass slice
     * far above the uniform mean — the exact batch the in-memory-store
-    * cliff is measured in — while a probe-forced small slice count
-    * makes the quotient OVERestimate files that are really capped at
-    * [[rowsPerSliceBound]] (tripping an unnecessary ~4× RocksDB
-    * switch). The drop folder is written before any drain runs, so
-    * the footers are always the ACTUAL batch sizes the stream will
-    * ingest.
+    * cliff is measured in. The drop folder is written before any drain
+    * runs, so the footers are always the ACTUAL batch sizes the stream
+    * will ingest.
     */
   private[graft] def sliceRowCounts(drop: String): Seq[Long] = {
     // Listing goes through the path's Hadoop FileSystem, NOT
@@ -982,9 +981,9 @@ object EventStreams {
   private[graft] def maxSliceRows(drop: String): Long =
     (0L +: sliceRowCounts(drop)).max
 
-  def streamCandles(spark: SparkSession, dir: String, slices0: Int = 0,
+  def streamCandles(spark: SparkSession, dir: String,
       lateness: String = "2 hours"): DataFrame = {
-    val slices = autoSlices(spark, dir, slices0)
+    val slices = autoSlices(spark, dir)
     val drop = candleReplayFor(spark, dir, slices)
     val perBatch = maxSliceRows(drop)
     drainUpdateStream(spark,
@@ -1017,11 +1016,12 @@ object EventStreams {
     val prevNoData = spark.conf.get(noDataBatchKey)
     spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
     // no-data batch skipped: see [[noDataBatchKey]] — the append-mode
-    // drains here are the inner interval join and NoTimeout
-    // flatMapGroupsWithState, neither of which can emit on a no-data
-    // batch (inner-join eviction and uninvoked state functions emit
-    // nothing; sessionStream, the append-mode aggregate that DOES flush
-    // on no-data batches, is deliberately not drained).
+    // drains here are the inner interval join (streamFollowups),
+    // dropDuplicatesWithinWatermark (streamDedup) and NoTimeout
+    // flatMapGroupsWithState (streamEma), none of which can emit on a
+    // no-data batch (inner-join and dedup eviction and uninvoked state
+    // functions emit nothing; sessionStream, the append-mode aggregate
+    // that DOES flush on no-data batches, is deliberately not drained).
     spark.conf.set(noDataBatchKey, "false")
     backend.foreach(p => spark.conf.set(stateProviderKey, p))
     try {
@@ -1066,7 +1066,7 @@ object EventStreams {
     * can no longer match, which is the bounded-state contract that makes
     * this join survive an unbounded stream.
     */
-  def streamFollowups(spark: SparkSession, dir: String, slices0: Int = 0,
+  def streamFollowups(spark: SparkSession, dir: String,
       threshold: Double = 100.0, windowMinutes: Int = 30,
       lateness: String = "2 hours"): DataFrame = {
     // GENUINELY shares streamCandles' replay folder (same (dir, slices)
@@ -1082,7 +1082,7 @@ object EventStreams {
     // slices/2 files per trigger — a rule that pinned the drain at ~2
     // batches and HALF the corpus of join state per batch at ANY slice
     // count: that is what ran the factor-300 probe out of driver heap.)
-    val slices = autoSlices(spark, dir, slices0)
+    val slices = autoSlices(spark, dir)
     val drop = candleReplayFor(spark, dir, slices)
     val perTrigger = 1
     // TWO readers each contribute one slice of buffered join rows per
@@ -1154,9 +1154,9 @@ object EventStreams {
     */
   private val dedupReplayCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), String]()
-  def streamDedup(spark: SparkSession, dir: String, slices0: Int = 0,
+  def streamDedup(spark: SparkSession, dir: String,
       dupMod: Int = 3, lateness: String = "2 hours"): DataFrame = {
-    val slices = autoSlices(spark, dir, slices0)
+    val slices = autoSlices(spark, dir)
     val drop = dedupReplayCache.computeIfAbsent((dir, slices, dupMod), {
       case (d, n, m) =>
         val ev = graft.Tables.table(spark, d, "events")

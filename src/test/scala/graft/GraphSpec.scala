@@ -68,8 +68,9 @@ class GraphSpec extends SparkSpec {
     // sized so width lands at a SMALL MULTIPLE of the session width
     // (~2×), not |E| itself — rowsPerPartition=1 forced thousands of
     // near-empty tasks per widened stage across two full runs for the
-    // same plan witness (the r14 ADVICE cost note); both closing
-    // strategies must still reproduce the default counts bit-for-bit
+    // same plan witness (the r14 ADVICE cost note); the widened
+    // shuffled closing must still reproduce the default counts
+    // bit-for-bit
     val dir = "/root/testdata/sf0.001"
     val edges = GraphOps.coPurchaseEdges(spark, dir)
       .localCheckpoint()
@@ -80,13 +81,9 @@ class GraphSpec extends SparkSpec {
     val rpp = nEdges.toLong / (2 * conf)
     val expWidth = math.ceil(nEdges.toDouble / rpp).toInt
     val wideAdj = GraphOps.triangleCountEdges(edges, 0L,
-      wedgeClose = false, rowsPerPartition = rpp)
-    val wideWedge = GraphOps.triangleCountEdges(edges, 0L,
-      wedgeClose = true, rowsPerPartition = rpp)
+      rowsPerPartition = rpp)
     assert(wideAdj.collect()(0).toSeq == default,
       "widened adjacency strategy diverged from the default counts")
-    assert(wideWedge.collect()(0).toSeq == default,
-      "widened wedge strategy diverged from the default counts")
     def repartitionWidths(df: org.apache.spark.sql.DataFrame): Seq[Int] =
       df.queryExecution.optimizedPlan.collect {
         case r: org.apache.spark.sql.catalyst.plans.logical
@@ -153,10 +150,9 @@ class GraphSpec extends SparkSpec {
         (1L to 6L).map(i => math.min(i, i % 6 + 1) ->
           math.max(i, i % 6 + 1)): _*),
       // K4 with every row REVERSED (hi, lo): per-row orientation is a
-      // caller's choice, not part of the undirected contract — the
-      // wedge strategy's membership join must canonicalize, not assume
-      // u < v (r13 ADVICE: all prior fixtures were canonical, so the
-      // three-way equality could never catch that divergence)
+      // caller's choice, not part of the undirected contract — both
+      // closing strategies must count it, not assume u < v (r13 ADVICE:
+      // all prior fixtures were canonical)
       edgeFrame(2L -> 1L, 3L -> 1L, 4L -> 1L, 3L -> 2L, 4L -> 2L,
         4L -> 3L))
     graphs.foreach { g =>
@@ -167,13 +163,6 @@ class GraphSpec extends SparkSpec {
       assert(bc.toSeq == sh.toSeq,
         s"broadcast (${bc.toSeq}) and shuffled (${sh.toSeq}) closing " +
           "joins must count identically")
-      // third strategy: the above-cap relational wedge form (no
-      // adjacency arrays at all) must agree on the same graphs
-      val wg = GraphOps.triangleCountEdges(g, broadcastEdgeLimit = 0L,
-        wedgeClose = true).collect()(0)
-      assert(bc.toSeq == wg.toSeq,
-        s"broadcast (${bc.toSeq}) and wedge (${wg.toSeq}) closing " +
-          "strategies must count identically")
     }
     // and the real co-purchase graph at sf0.001 through the forced
     // shuffled path equals the default (broadcast at this size) path
@@ -189,13 +178,11 @@ class GraphSpec extends SparkSpec {
       .distinct()
     val forcedShuffle = GraphOps.triangleCountEdges(edges, 0L).collect()(0)
     assert(defaultPath.toSeq == forcedShuffle.toSeq)
-    val forcedWedge = GraphOps.triangleCountEdges(edges, 0L, wedgeClose = true)
-      .collect()(0)
-    assert(defaultPath.toSeq == forcedWedge.toSeq)
   }
 
   test("triangleCountEdges is type-agnostic: INT-typed edge ids count " +
-      "identically through every strategy, including the rank path") {
+      "identically through both closing strategies, including the rank " +
+      "path") {
     // the API contract is "any numeric id type"; the r17 dense-rank
     // relabel reads node ids via getLong off a .rdd, which an
     // IntegerType edge frame would ClassCastException without the
@@ -209,12 +196,9 @@ class GraphSpec extends SparkSpec {
       broadcastEdgeLimit = 0L).collect()(0)
     val viaBroadcast = GraphOps.triangleCountEdges(intEdges,
       broadcastEdgeLimit = Long.MaxValue).collect()(0)
-    val viaWedge = GraphOps.triangleCountEdges(intEdges,
-      broadcastEdgeLimit = 0L, wedgeClose = true).collect()(0)
     assert(viaRank.toSeq == Seq(8L, 10L, 5L),
       s"int-typed K4+pendant+triangle graph: ${viaRank.toSeq}")
-    assert(viaBroadcast.toSeq == viaRank.toSeq &&
-      viaWedge.toSeq == viaRank.toSeq,
+    assert(viaBroadcast.toSeq == viaRank.toSeq,
       "strategies must agree on int-typed edges")
   }
 

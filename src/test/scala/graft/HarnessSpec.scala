@@ -45,6 +45,33 @@ class HarnessSpec extends AnyFunSuite {
         "python3 tools/gen_catalog.py")
   }
 
+  test("src/main defines exactly the kept harness mains (probe guard)") {
+    // src/main is the engine plus the driver harness and a fixed set of
+    // measurement harnesses; per-stage and per-micro-batch attribution
+    // is the traced benchmark run (perfbench/run.py --trace 1). A new
+    // `main` must be argued for and added here, not accreted.
+    val root = new java.io.File("src/main/scala")
+    assume(root.isDirectory, "src/main/scala not present in test cwd")
+    def sources(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) sources(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    val objectDecl = """(?m)^\s*object\s+(\w+)""".r
+    val mains = sources(root).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val text = try src.mkString finally src.close()
+      // each `def main(` belongs to the nearest object declared above it
+      "def main\\(".r.findAllMatchIn(text).map { m =>
+        objectDecl.findAllMatchIn(text.substring(0, m.start)).toSeq
+          .lastOption.map(_.group(1)).getOrElse(s"<no object in $f>")
+      }
+    }
+    assert(mains.sorted == Seq("Bench", "BenchSweep", "ClusterProbe",
+      "RecallSweep", "ScaleRatios", "ScaleSmoke", "ScaleUp", "Verify"),
+      s"main objects under src/main/scala: ${mains.sorted}")
+  }
+
   test("auto io codec: declared SFs stay lz4 byte-identical; the " +
       "measured sf30/sf10 decisions reproduce") {
     // The codec pin (r17 verdict item 1): the engine may choose zstd

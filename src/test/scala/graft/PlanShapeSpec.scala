@@ -392,8 +392,9 @@ class PlanShapeSpec extends SparkSpec {
     // ACTUAL executed write plan via a QueryExecutionListener: if anyone
     // ever "optimizes" the sink back to count() (or any other pruning
     // action), the captured plan loses the pinned operator and this
-    // fails. Sentinels: asof_join_candles (lost its Window under
-    // count()) and merge_corpus_day (lost entire joins).
+    // fails. Sentinels from four modules: asof_join_candles and
+    // max_drawdown (lost their Window under count()), merge_corpus_day
+    // and vocab_encode (lost entire joins).
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -406,7 +407,8 @@ class PlanShapeSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     try {
       for ((name, op) <- Seq("asof_join_candles" -> "Window",
-          "merge_corpus_day" -> "Join")) {
+          "merge_corpus_day" -> "Join", "max_drawdown" -> "Window",
+          "vocab_encode" -> "Join")) {
         captured.clear()
         Bench.materialize(SparkEntry.queries(name)(spark, dir))
         // QueryExecutionListener delivery is async — poll up to 30 s
