@@ -634,7 +634,7 @@ object SparkEntry {
     // the checkpointed corpus state, drained with Trigger.AvailableNow —
     // shares merge_corpus_day's oracle (stream ≡ batch)
     "merge_stream_day" -> ((s, dir) =>
-      streaming.EventStreams.mergeStreamDay(s, dir, 5, minJaccard = 0.5)),
+      streaming.EventStreams.mergeStreamDay(s, dir)),
     // the watermarked STATEFUL-AGGREGATION streaming path under the same
     // gate: hourly candles computed by a real StreamingQuery over the
     // events table replayed as time-ordered drop-folder slices, drained

@@ -55,7 +55,7 @@ class StreamingSpec extends SparkSpec {
   test("mergeStreamDay (the declared drain-then-read form) equals the " +
     "batch merge row-for-row") {
     val dir = "/root/testdata/sf0.001"
-    val got = EventStreams.mergeStreamDay(spark, dir, 5, minJaccard = 0.5)
+    val got = EventStreams.mergeStreamDay(spark, dir)
       .collect().map(_.toSeq).toSet
     val docs = Tables.table(spark, dir, "documents")
     val want = graft.operators.Dedup.mergeCorpusDay(
@@ -318,6 +318,95 @@ class StreamingSpec extends SparkSpec {
     assert(got == want,
       s"declared streaming EMA diverged: stream-only=${(got -- want).take(3)}, " +
         s"batch-only=${(want -- got).take(3)}")
+  }
+
+  test("the stateful drains skip the no-data batch, shuffle state 4 " +
+    "ways, keep their confs off the caller's session while running, and " +
+    "report to its listeners") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.streaming.{StreamingQueryListener,
+      StreamingQueryProgress}
+    import StreamingQueryListener._
+    val dir = "/root/testdata/sf0.001"
+    // runIds started by the current drain: QueryStartedEvent reaches the
+    // session's listeners synchronously inside start(), so late events
+    // of earlier queries are ignored
+    val started = java.util.concurrent.ConcurrentHashMap
+      .newKeySet[java.util.UUID]()
+    val progress =
+      new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val terminated = new java.util.concurrent.atomic.AtomicBoolean()
+    // the caller's width, as seen while each batch of a drain reports
+    val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions")
+    val widthsSeen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        started.add(e.runId)
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (started.contains(e.progress.runId)) {
+          progress.add(e.progress)
+          widthsSeen.add(spark.conf.get("spark.sql.shuffle.partitions"))
+        }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (started.contains(e.runId)) terminated.set(true)
+    }
+    spark.streams.addListener(listener)
+    try Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "stream_candles" -> (() => EventStreams.streamCandles(spark, dir)),
+      "stream_followups" -> (() => EventStreams.streamFollowups(spark, dir)),
+      "stream_dedup" -> (() => EventStreams.streamDedup(spark, dir)),
+      "stream_ema" -> (() => EventStreams.streamEma(spark, dir))
+    ).foreach { case (name, run) =>
+      started.clear(); progress.clear(); widthsSeen.clear()
+      terminated.set(false)
+      run()
+      // progress and termination events arrive asynchronously but in
+      // order: once termination is seen, every progress event is in
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!terminated.get && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(terminated.get,
+        s"$name: the drain's events never reached the caller's session")
+      val batches = progress.asScala.toSeq
+      assert(batches.nonEmpty, s"$name: no micro-batch progress reported")
+      assert(batches.forall(_.numInputRows > 0),
+        s"$name: a no-data batch ran: ${batches.map(_.numInputRows)}")
+      val widths = batches.map(_.stateOperators.map(_.numShufflePartitions))
+      assert(widths.forall(w => w.nonEmpty && w.forall(_ == 4)),
+        s"$name: state shuffle widths ${widths.map(_.toSeq)}, expected 4")
+      assert(widthsSeen.asScala.forall(_ == sessionWidth),
+        s"$name: the caller's session carried the drain's width while it " +
+          s"ran: ${widthsSeen.asScala.toSeq}, session's is $sessionWidth")
+    } finally spark.streams.removeListener(listener)
+  }
+
+  test("concurrent drains on one session return their sequential results " +
+    "and leave the session's drain confs as they were") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val dir = "/root/testdata/sf0.001"
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled",
+      "spark.sql.streaming.stateStore.providerClass")
+    // explicitly-set entry and effective value, per key
+    def confs = keys.map(k => (spark.conf.getAll.get(k), spark.conf.getOption(k)))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val before = confs
+    val candles = rows(EventStreams.streamCandles(spark, dir))
+    val dedup = rows(EventStreams.streamDedup(spark, dir))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val both = Future.sequence(Seq(
+        Future(rows(EventStreams.streamCandles(spark, dir))),
+        Future(rows(EventStreams.streamDedup(spark, dir)))))
+      val Seq(candles2, dedup2) = Await.result(both, 300.seconds)
+      assert(candles2 == candles, "concurrent streamCandles diverged")
+      assert(dedup2 == dedup, "concurrent streamDedup diverged")
+    } finally pool.shutdown()
+    assert(confs == before,
+      s"drain confs not restored: before=$before after=$confs")
   }
 
   test("streaming candles recover from a checkpoint without duplicates") {
