@@ -50,7 +50,6 @@ object ClusterProbe {
       .config("spark.executor.extraClassPath", classes)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     try {
       // wait for both executor JVMs to register before reading
       // live-executor-derived inferences (registration is async)

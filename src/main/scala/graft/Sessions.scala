@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 /** Single place for engine session config so Verify, Bench, and tests run
   * identical settings.
@@ -9,19 +10,18 @@ object Sessions {
   /** Cores to use; the driver exports SPARK_GRAFT_CPUS. */
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
+  /** Every engine session is built here, with [[graft.functions
+    * .GraftExtensions]] installed: the engine's Catalyst functions and
+    * its optimizer rule are part of the session from build time, and
+    * `newSession()` inherits them.
+    */
   def builder(master: String = s"local[$cpus]"): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
+      .withExtensions(new graft.functions.GraftExtensions)
       // Shuffle width = cores, not the 200 default — at cluster scale this
       // is a capacity-planning knob; AQE coalesces small partitions anyway.
-      // SPARK_GRAFT_SHUFFLE_PARTITIONS overrides for scale-harness runs
-      // (ScaleUp's sf10 spot check): partitions must grow with data or
-      // per-partition aggregation state grows without bound — a fixed 32
-      // at 100× the driver SF is a local-mode ceiling no cluster
-      // deployment would configure. The driver contract itself never
-      // sets it, so driver benches keep shuffle width = cores.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       // InferFiltersFromGenerate clones the full generator expression into
       // a pre-Generate filter; for explode(expensive-higher-order-expr)
@@ -33,17 +33,16 @@ object Sessions {
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.sql.session.timeZone", "UTC")
       // Shuffle/spill/broadcast block codec — ENGINE-CHOSEN (r17 verdict
-      // item 1, the autoBackend pattern): explicit SPARK_GRAFT_IO_CODEC
-      // always wins; otherwise [[autoIoCodec]] picks zstd only when the
-      // measured lz4 scratch model says the workload's spill footprint
-      // would crowd the scratch disk, and lz4 (Spark's own default —
-      // every historical bench number was measured under it) everywhere
-      // else. Declared-SF sessions are byte-identical to every prior
-      // round by construction (MB-scale inputs sit orders of magnitude
-      // under the threshold — HarnessSpec pins this). The codec must be
-      // decided HERE, not per-query: SerializerManager caches it lazily
-      // at first compressed block, so a session-conf change after the
-      // first shuffle is silently ignored.
+      // item 1, the autoBackend pattern): [[autoIoCodec]] picks zstd only
+      // when the measured lz4 scratch model says the workload's spill
+      // footprint would crowd the scratch disk, and lz4 (Spark's own
+      // default — every historical bench number was measured under it)
+      // everywhere else. Declared-SF sessions are byte-identical to every
+      // prior round by construction (MB-scale inputs sit orders of
+      // magnitude under the threshold — HarnessSpec pins this). The codec
+      // must be decided HERE, not per-query: SerializerManager caches it
+      // lazily at first compressed block, so a session-conf change after
+      // the first shuffle is silently ignored.
       .config("spark.io.compression.codec", chosenIoCodec())
       // Compress SERIALIZED rdd storage (DISK_ONLY localCheckpoints —
       // the graph module's edge-sized materializations). Spark defaults
@@ -96,30 +95,26 @@ object Sessions {
         .getContentSummary(p).getLength
     } catch { case _: Exception => 0L }
 
-  /** Codec wiring: explicit env wins; auto needs a data-dir handle,
-    * and SPARK_GRAFT_SF_DIR (the driver contract's data pointer, set
-    * by Bench and every scale probe) is the one available at session
-    * construction. Unset (unit tests, Verify's arg-passed dir at toy
-    * SF) → lz4, the declared default. The auto choice is announced on
-    * stderr so a capstone log self-attributes its codec. */
+  /** Codec wiring: auto needs a data-dir handle, and SPARK_GRAFT_SF_DIR
+    * (the data directory Bench and every scale probe read) is the one
+    * available at session construction. Unset (unit tests, Verify's
+    * arg-passed dir at toy SF) → lz4, the declared default. A non-lz4
+    * choice is announced on stderr so a capstone log self-attributes its
+    * codec. */
   private def chosenIoCodec(): String =
-    sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", {
-      sys.env.get("SPARK_GRAFT_SF_DIR") match {
-        case Some(dir) =>
-          val scratch = new java.io.File(
-            sys.props.getOrElse("spark.local.dir",
-              sys.props.getOrElse("java.io.tmpdir", "/tmp")))
-            .getUsableSpace
-          val input = dataDirBytes(dir)
-          val codec = autoIoCodec(input, scratch)
-          if (codec != "lz4") System.err.println(
-            f"[session] io codec=$codec (auto: input ${input / 1e9}%.1f GB" +
-              f" x $Lz4ScratchPerInputByte%.0f B/B lz4-scratch model > " +
-              f"${ScratchHeadroomFactor}%.1f x ${scratch / 1e9}%.1f GB free)")
-          codec
-        case None => "lz4"
-      }
-    })
+    sys.env.get("SPARK_GRAFT_SF_DIR").fold("lz4") { dir =>
+      val scratch = new java.io.File(
+        sys.props.getOrElse("spark.local.dir",
+          sys.props.getOrElse("java.io.tmpdir", "/tmp")))
+        .getUsableSpace
+      val input = dataDirBytes(dir)
+      val codec = autoIoCodec(input, scratch)
+      if (codec != "lz4") System.err.println(
+        f"[session] io codec=$codec (auto: input ${input / 1e9}%.1f GB" +
+          f" x $Lz4ScratchPerInputByte%.0f B/B lz4-scratch model > " +
+          f"${ScratchHeadroomFactor}%.1f x ${scratch / 1e9}%.1f GB free)")
+      codec
+    }
 
   def get(appName: String): SparkSession = {
     val spark = builder().appName(appName).getOrCreate()
@@ -131,7 +126,15 @@ object Sessions {
     // driver parses. Raise just the rdd package loggers to ERROR.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    graft.functions.GraftFunctions.register(spark)
+    // getOrCreate hands back an already-running session as is, without
+    // applying the builder's extensions: fail here rather than at the
+    // first query that calls an engine function.
+    require(spark.sessionState.functionRegistry
+        .functionExists(FunctionIdentifier("md5_base60")),
+      s"session '${spark.sparkContext.appName}' was not built by " +
+        "Sessions.builder and lacks the engine's functions; build it with " +
+        "Sessions.builder or spark.sql.extensions=" +
+        "graft.functions.GraftExtensions")
     spark
   }
 

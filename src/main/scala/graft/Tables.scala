@@ -29,17 +29,6 @@ object Tables {
     StructField("volume", DoubleType)
   ))
 
-  /** Canonical candle schema: symbol, event-time ts, OHLCV doubles. */
-  val candleSchema: StructType = StructType(Seq(
-    StructField("symbol", StringType),
-    StructField("ts", TimestampType),
-    StructField("open", DoubleType),
-    StructField("high", DoubleType),
-    StructField("low", DoubleType),
-    StructField("close", DoubleType),
-    StructField("volume", DoubleType)
-  ))
-
   /** Driver parquet table reader (TESTDATA.md): `region nation customer
     * supplier part orders lineitem events documents embeddings`.
     * Parquet scan ⇒ Catalyst column pruning + predicate pushdown for free —

@@ -22,8 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * b is > 0 (duplicate tokens vote multiple times — natural frequency
   * weighting).
   *
-  * Usage: registered as SQL function `simhash64` (see
-  * [[GraftFunctions.register]]).
+  * Usage: SQL function `simhash64`, installed by [[GraftExtensions]].
   */
 case class SimHash64(child: Expression) extends UnaryExpression {
 

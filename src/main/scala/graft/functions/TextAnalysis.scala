@@ -141,7 +141,6 @@ object TextAnalysis {
     * versioning (no RNG, no sampleBy seed drift across runs).
     */
   def trainValSplit(docs: DataFrame, trainPct: Int = 90): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // md5_base60 ≡ conv(substring(md5(s),1,15),16,10) fused (SimHash
     // .scala) — value-identical, so the oracle keeps the chained form
     val bucket =
@@ -210,7 +209,6 @@ object TextAnalysis {
     */
   def stratifiedSample(docs: DataFrame, rates: Map[String, Int],
       defaultPct: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val bucket = call_function("md5_base60",
       concat(lit("strat:"), col("doc_id").cast("string"))) % 100
     val rate = rates.toSeq.sortBy(_._1).foldLeft(lit(defaultPct)) {
@@ -343,7 +341,6 @@ object TextAnalysis {
     * tokens) score 0 by convention (no evidence of fluency).
     */
   def lmCoverage(docs: DataFrame, minCount: Long = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val bg = wide(docs).select(col("doc_id"), tokens(col("text")).as("w"))
       .select(col("doc_id"), ngramsFromTokens(col("w"), 2).as("g"))
       .select(col("doc_id"), explode_outer(col("g")).as("bigram"))
@@ -382,7 +379,6 @@ object TextAnalysis {
     */
   def packSequences(docs: DataFrame, budgetTokens: Long = 512,
       nShards: Int = 4): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val shard = call_function("md5_base60",
       concat(lit("pack:"), col("doc_id").cast("string"))) % nShards
     val w = org.apache.spark.sql.expressions.Window
@@ -464,7 +460,6 @@ object TextAnalysis {
     // would silently emit draws {0, -1} instead of none
     require(k >= 1, s"k ($k) must be >= 1")
     require(nBuckets >= 1, s"nBuckets ($nBuckets) must be >= 1")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val reps = docs
       .select((call_function("md5_base60", col("doc_id").cast("string"))
         % nBuckets).as("bucket"), col("doc_id"))
@@ -503,7 +498,6 @@ object TextAnalysis {
     * k-gram; the slice()'s natural tail truncation covers nGrams < w.
     */
   def winnowFingerprints(docs: DataFrame, k: Int = 3, w: Int = 4): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val grams = when(size(col("t")) >= k,
       transform(sequence(lit(0), size(col("t")) - k),
         i => concat_ws(" ", slice(col("t"), i + lit(1), lit(k)))))
@@ -879,7 +873,6 @@ object TextAnalysis {
     */
   def dsirWeights(docs: DataFrame, targetLang: String = "en",
       nBuckets: Int = 256): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val bg = wide(docs)
       .select(col("doc_id"), col("lang"), tokens(col("text")).as("w"))
       .select(col("doc_id"), col("lang"), ngramsFromTokens(col("w"), 2).as("g"))

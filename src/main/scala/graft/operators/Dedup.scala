@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{GraftFunctions, TextAnalysis}
+import graft.functions.TextAnalysis
 import graft.functions.TextAnalysis.{normText, tokens}
 
 /** Deduplication operators over `documents` (LLM-data-pipeline north star).
@@ -72,7 +72,6 @@ object Dedup {
     * domain and agree bit-for-bit even in the (≈2⁻⁶⁵·n²) collision case.
     */
   private def shingleTable(docs: DataFrame, n: Int): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     // widenCpu: the tokenize→shingle→md5 chain is the pipeline's CPU,
     // and it runs INSIDE the scan stage — split-bound parallelism, one
     // task on single-row-group fixtures (StageProbe r18). Widen only
@@ -93,7 +92,6 @@ object Dedup {
     */
   private def shingleArrays(docs: DataFrame, n: Int,
       extra: Seq[(String, Column)] = Nil): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     // `extra` (name → text-derived expression, e.g. the content
     // fingerprint) is computed in the FIRST projection alongside
     // tokenization and carried through — corpusDedupState builds on
@@ -231,8 +229,7 @@ object Dedup {
   /** 60-bit md5 base hash (≡ conv(substr(md5(s),1,15),16,10)), as the
     * fused codegen'd [[graft.functions.Md5Base60]] expression — one
     * digest + shift per shingle instead of hex-string materialization,
-    * substring, and base-16 parse. Callers must have run
-    * [[GraftFunctions.register]] (shingleTable/shingleArrays do).
+    * substring, and base-16 parse.
     */
   private def md5Base60(s: Column): Column = call_function("md5_base60", s)
 
@@ -348,6 +345,18 @@ object Dedup {
     verified
   }
 
+  /** Width of the near-dup iterations: sized to the PAIR GRAPH, not the
+    * corpus. Near-dup edges are orders of magnitude fewer than documents,
+    * and each round (label propagation or a large/small-star step) is
+    * join+agg stages over just these edges — running them at corpus
+    * width burns a fixed per-task cost per round for mostly-empty
+    * partitions. ~100k edges per partition, capped at the context's
+    * default parallelism.
+    */
+  private def pairGraphWidth(spark: SparkSession, edges: Long): Int =
+    math.max(1, math.min(spark.sparkContext.defaultParallelism,
+      (edges / 100000L).toInt + 1))
+
   /** Transitive near-duplicate clusters: connected components over the
     * Jaccard pair graph, each labeled by its minimum doc_id — the step a
     * production dedup keys on (A≈B and B≈C must collapse to ONE kept doc
@@ -371,15 +380,8 @@ object Dedup {
       .union(pairs.select(col("doc_b"), col("doc_a")))
       .toDF("src", "dst")
       .localCheckpoint()
-    // Size the iteration width to the PAIR GRAPH, not the corpus: near-dup
-    // edges are orders of magnitude fewer than documents, and each loop
-    // round is join+agg stages over just these edges — running them at
-    // corpus width burns a fixed per-task cost per round for mostly-empty
-    // partitions. ~100k edges per partition; the checkpoint above already
-    // materialized the edge count.
-    val defaultPar = docs.sparkSession.sparkContext.defaultParallelism
-    val parts = math.max(1, math.min(defaultPar,
-      (edgesRaw.count() / 100000L).toInt + 1))
+    // the checkpoint above already materialized the edge count
+    val parts = pairGraphWidth(docs.sparkSession, edgesRaw.count())
     val edges = edgesRaw.repartition(parts, col("dst")).localCheckpoint()
     var labels = edges.select(col("src").as("doc_id")).distinct()
       .withColumn("label", col("doc_id"))
@@ -431,7 +433,6 @@ object Dedup {
     * the join probe side under AQE).
     */
   def dedupLines(docs: DataFrame, maxDf: Int = 2): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     // coalesce: split(NULL) is NULL and posexplode(NULL) emits ZERO
     // rows, which would silently DROP a NULL-text doc from the output —
     // every other text operator maps degenerate text to a defined value
@@ -491,7 +492,6 @@ object Dedup {
     */
   def duplicateSpans(docs: DataFrame, k: Int = 5,
       minDf: Long = 2): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     // widenCpu (r18, second session): the tokenize + k-gram posexplode
     // chain is this query's CPU and runs INSIDE the scan stage — one
     // task on single-row-group fixtures (StageProbe: 0.82 of 1.33 s on
@@ -532,7 +532,6 @@ object Dedup {
     * expression — one pass over the scan, no shuffle.
     */
   def simhashFingerprints(docs: DataFrame): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       call_function("simhash64", tokens(col("text"))).as("simhash"))
   }
@@ -608,11 +607,8 @@ object Dedup {
     val cols = pairs.columns
     var edges = canon(pairs.select(col(cols(0)).as("u"), col(cols(1)).as("v")))
       .localCheckpoint()
-    // Edge-graph-sized width, same rationale as [[nearDupClusters]]: star
-    // rounds run over the pair graph, not the corpus.
-    val defaultPar = pairs.sparkSession.sparkContext.defaultParallelism
     var (n, s) = metrics(edges)
-    val parts = math.max(1, math.min(defaultPar, (n / 100000L).toInt + 1))
+    val parts = pairGraphWidth(pairs.sparkSession, n)
     edges = edges.repartition(parts, col("hi")).localCheckpoint()
     var converged = false
     var iter = 0
@@ -755,7 +751,6 @@ object Dedup {
     */
   def corpusDedupState(docs: DataFrame, n: Int = 3, k: Int = 16,
       rowsPerBand: Int = 4): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val nBands = k / rowsPerBand
     val withSha = shingleArrays(docs, n,
       extra = Seq("fingerprint" -> md5(normText(col("text")))))

@@ -55,9 +55,8 @@ object GraphOps {
     // was wrong). |lineitem| is a footer-cheap memoized count; identity
     // at-or-below the session width, same contract as every width rule.
     val confWidth = spark.sessionState.conf.numShufflePartitions
-    val buildWidth = math.max(confWidth,
-      math.ceil(graft.Tables.rowCount(spark, dir, "lineitem").toDouble /
-        edgeRowsPerPartition(spark)).toInt)
+    val buildWidth =
+      edgeWidth(spark, graft.Tables.rowCount(spark, dir, "lineitem"))
     // Conditional below the session width (NOT the coPurchaseEdges
     // always-explicit form — measured 1.88 → 2.39 s at sf0.1 with it):
     // the checkpointed edge list inherits the build's partitioning, and
@@ -119,6 +118,17 @@ object GraphOps {
     math.min(math.max(rows, 64000L), 16000000L)
   }
 
+  /** The width of an exchange over `rows` edge-sized rows:
+    * ⌈rows / `rowsPerPartition`⌉ (0 = [[edgeRowsPerPartition]]), never
+    * below the session shuffle width. Each caller decides whether to
+    * widen only above the session width or always.
+    */
+  private def edgeWidth(spark: SparkSession, rows: Long,
+      rowsPerPartition: Long = 0L): Int =
+    math.max(spark.sessionState.conf.numShufflePartitions,
+      math.ceil(rows.toDouble / (if (rowsPerPartition > 0)
+        rowsPerPartition else edgeRowsPerPartition(spark))).toInt)
+
   /** The iteration core over an arbitrary SYMMETRIC `(src, dst)` edge
     * list (every node must have out-degree ≥ 1 — guaranteed by
     * symmetrization). Returns `(node, rk)` fixed-point ranks.
@@ -177,9 +187,8 @@ object GraphOps {
     // exchange, so AQE can neither re-split skew nor widen it; measured
     // at factor 100 / width 32 it turned the completing 294 s plain
     // form into a task heap OOM. The scaling lever that actually works
-    // is shuffle width ∝ data (the documented
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS knob): 294 s at width 32 →
-    // 111.6 s at width 320 = 7.0× vs the 10× smaller build — linear
+    // is shuffle width ∝ data ([[edgeWidth]] below): 294 s at width 32
+    // → 111.6 s at width 320 = 7.0× vs the 10× smaller build — linear
     // (SCALE.md r13).
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
@@ -193,12 +202,9 @@ object GraphOps {
     val peek = deg.agg(coalesce(sum(col("deg")), lit(0L)),
       coalesce(max(col("src")).cast("long"), lit(0L))).head()
     val (nEdges, maxNodeId) = (peek.getLong(0), peek.getLong(1))
-    val confWidth = edgeList.sparkSession.sessionState.conf.numShufflePartitions
-    val width = math.max(confWidth,
-      math.ceil(nEdges.toDouble / (if (rowsPerPartition > 0)
-        rowsPerPartition
-        else edgeRowsPerPartition(edgeList.sparkSession))).toInt)
-    val wide = width > confWidth
+    val width = edgeWidth(edgeList.sparkSession, nEdges, rowsPerPartition)
+    val wide =
+      width > edgeList.sparkSession.sessionState.conf.numShufflePartitions
     // Widening inserts REPARTITION-origin exchanges only ABOVE the
     // session width: the hash layout at a given width is identical to
     // what EnsureRequirements would produce, the subtree is iteration-
@@ -346,10 +352,8 @@ object GraphOps {
     */
   def coPurchaseEdges(spark: SparkSession, dir: String): DataFrame = {
     val li = table(spark, dir, "lineitem")
-    val confWidth = spark.sessionState.conf.numShufflePartitions
-    val width = math.max(confWidth,
-      math.ceil(2.0 * graft.Tables.rowCount(spark, dir, "lineitem") /
-        edgeRowsPerPartition(spark)).toInt)
+    val width =
+      edgeWidth(spark, 2 * graft.Tables.rowCount(spark, dir, "lineitem"))
     // Explicit width ALWAYS (r18): the per-order pair explode and the
     // pair distinct are CPU-dense (C(n,2) struct fan-out per order), and
     // AQE's byte-based coalescing squeezed both to ~4 tasks at bench
@@ -473,14 +477,11 @@ object GraphOps {
     // partitions was one container window's worth of luck, which is
     // not a scale design). Identity at-or-below the session width:
     // small graphs keep byte-identical plans and full AQE control.
-    val confWidth =
-      edges0.sparkSession.sessionState.conf.numShufflePartitions
-    val width = math.max(confWidth,
-      math.ceil(nEdges.toDouble / (if (rowsPerPartition > 0)
-        rowsPerPartition
-        else edgeRowsPerPartition(edges0.sparkSession))).toInt)
+    val width = edgeWidth(edges0.sparkSession, nEdges, rowsPerPartition)
+    val wide =
+      width > edges0.sparkSession.sessionState.conf.numShufflePartitions
     def widen(df: DataFrame, k: Column*): DataFrame =
-      if (width > confWidth) df.repartition(width, k: _*) else df
+      if (wide) df.repartition(width, k: _*) else df
     // orient low-rank → high-rank, rank = (deg, id). On the rank path
     // the joined-in attribute IS the dense ordinal (int) and the
     // comparison is a plain int compare; otherwise the degrees attach

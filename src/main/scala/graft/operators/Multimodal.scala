@@ -29,8 +29,6 @@ import org.apache.spark.sql.functions._
   * INTER-frame compressed formats (h264/vp9) stay out of reach — the
   * JVM has no such codec; swapping javacpp/ffmpeg into the
   * [[decodeVideoFrames]] partition loop is a local change.
-  * [[decodeAndFeaturize]] remains the codec-free byte featurizer for
-  * anything else.
   */
 object Multimodal {
 
@@ -45,11 +43,6 @@ object Multimodal {
 
   /** A media row: payload stays opaque binary end-to-end. */
   case class Media(media_id: Long, kind: String, payload: Array[Byte])
-
-  /** Decoded metadata + a fixed-width feature vector. */
-  case class MediaFeatures(
-      media_id: Long, kind: String, n_bytes: Long,
-      width: Int, height: Int, features: Array[Double])
 
   /** Real-decode output: exact per-channel pixel sums (integers — the
     * oracle-friendly form; means are a single double division downstream)
@@ -374,60 +367,6 @@ object Multimodal {
       round(col("sum_abs").cast("double") /
         col("n_samples").cast("double"), 6).as("mean_abs"))
 
-  /** Fake 8-byte header: [w_hi, w_lo, h_hi, h_lo, ...] — stands in for a
-    * real container header so tests exercise header-vs-payload splitting.
-    */
-  def encodeFakeHeader(width: Int, height: Int, body: Array[Byte]): Array[Byte] =
-    Array[Byte](
-      ((width >> 8) & 0xff).toByte, (width & 0xff).toByte,
-      ((height >> 8) & 0xff).toByte, (height & 0xff).toByte,
-      0, 0, 0, 0) ++ body
-
-  /** Codec-free byte featurizer for payloads the JVM cannot decode
-    * natively (audio/video containers): header parse + 16-bin byte
-    * histogram (deterministic). For images use [[decodeImages]] — that
-    * path reads real pixels.
-    */
-  def decodeAndFeaturize(media: Dataset[Media]): Dataset[MediaFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      // real codecs would init native handles HERE, once per partition
-      rows.map { m =>
-        val p = m.payload
-        val (w, h) =
-          if (p.length >= 8)
-            (((p(0) & 0xff) << 8) | (p(1) & 0xff),
-             ((p(2) & 0xff) << 8) | (p(3) & 0xff))
-          else (0, 0)
-        val hist = new Array[Double](16)
-        var i = 8
-        while (i < p.length) { hist((p(i) & 0xff) >> 4) += 1.0; i += 1 }
-        val n = math.max(p.length - 8, 1).toDouble
-        MediaFeatures(m.media_id, m.kind, p.length.toLong, w, h,
-          hist.map(_ / n))
-      }
-    }
-  }
-
-  /** Frame sampling for video payloads: every `stride`-th frame offset
-    * given a (stubbed) fixed frame size — the partition/explode shape of
-    * real frame extraction.
-    */
-  def sampleFrameOffsets(media: DataFrame, frameBytes: Int = 256,
-      stride: Int = 10): DataFrame =
-    media
-      .withColumn("n_frames",
-        floor((length(col("payload")) - lit(8)) / lit(frameBytes)))
-      // payloads with zero complete frames must yield NO sampled frames:
-      // without this filter, sequence(0, greatest(n-1, 0)) still emits
-      // frame_idx 0 whose byte_offset points past the payload's frame data
-      .filter(col("n_frames") > 0)
-      .withColumn("frame_idx",
-        explode(sequence(lit(0), col("n_frames") - 1, lit(stride))))
-      .select(col("media_id"), col("frame_idx"),
-        (lit(8) + col("frame_idx") * lit(frameBytes)).as("byte_offset"))
-
   // ---- REAL video path: frame-packed container of real PNG frames ------
 
   /** Per-sampled-frame decode output: exact integer channel sums. */
@@ -547,53 +486,10 @@ object Multimodal {
       round(col("sum_b").cast("double") / n, 6).as("mean_b"))
   }
 
-  /** Batched resize over the FAKE raster format (see [[encodeFakeHeader]]):
-    * nearest-neighbor over the body byte at the scaled offset. The real
-    * image path is [[resizeImage]]; this stays as the byte-level analog
-    * for payloads without a JVM codec.
-    */
-  def resize(media: Dataset[Media], targetW: Int, targetH: Int): Dataset[Media] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      rows.map { m =>
-        val p = m.payload
-        val (w, h) =
-          if (p.length >= 8)
-            (math.max(((p(0) & 0xff) << 8) | (p(1) & 0xff), 1),
-             math.max(((p(2) & 0xff) << 8) | (p(3) & 0xff), 1))
-          else (1, 1)
-        val body = p.drop(8)
-        val out = new Array[Byte](targetW * targetH)
-        if (body.nonEmpty) {
-          var y = 0
-          while (y < targetH) {
-            var x = 0
-            while (x < targetW) {
-              val sx = x * w / targetW
-              val sy = y * h / targetH
-              out(y * targetW + x) = body((sy * w + sx) % body.length)
-              x += 1
-            }
-            y += 1
-          }
-        }
-        Media(m.media_id, m.kind, encodeFakeHeader(targetW, targetH, out))
-      }
-    }
-  }
-
-  /** Cosine-ready embedding join: attach media features to the embeddings
-    * table shape (media features become an ARRAY<DOUBLE> column usable by
+  /** Cosine-ready embedding handoff: the decoded images' luminance
+    * histograms in the embeddings table shape (`ARRAY<DOUBLE>` usable by
     * [[Similarity]] operators — the multimodal→vector handoff).
     */
-  def featuresAsEmbeddings(features: Dataset[MediaFeatures]): DataFrame =
-    features.toDF().select(
-      col("media_id").as("vec_id"),
-      col("features").as("embedding"),
-      col("kind"))
-
-  /** [[featuresAsEmbeddings]] over the REAL image decode. */
   def imageEmbeddings(stats: Dataset[ImageStats]): DataFrame =
     stats.toDF().select(
       col("media_id").as("vec_id"),

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
-
 /** Similarity search over the `embeddings` table
   * (`embedding: ARRAY<FLOAT>`, LLM-pipeline north star).
   *
@@ -200,7 +198,6 @@ object Similarity {
     * the embedding arrays never leave their scan partitions.
     */
   def annTopK(embeddings: DataFrame, nQueries: Int = 8, k: Int = 5): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
     val queries = broadcast(
       embeddings.filter(col("vec_id") < nQueries)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"),
@@ -231,7 +228,6 @@ object Similarity {
     * for this labeled corpus).
     */
   def nearDupPairs(embeddings: DataFrame, minSim: Double = 0.3): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
     // norms once per vector (n rows), not once per pair (n² rows);
     // widenCpu parallelizes the per-row decimal norm out of the
     // split-bound scan stage (no-op at production scale)
@@ -287,7 +283,6 @@ object Similarity {
       s"planes ($planes) must be a multiple of bandBits ($bandBits)")
     val bands = planes / bandBits
     val spark = embeddings.sparkSession
-    GraftFunctions.register(spark)
     // dim probe: FIRST row only (a LocalLimit(1) single-split peek — the
     // prior max(size(...)) aggregated the whole corpus at plan-build
     // time). NOT memoized: a canonicalized-plan key omits LocalRelation
@@ -445,7 +440,6 @@ object Similarity {
     * join and one (label, pos) aggregate, no corpus shuffle.
     */
   def kmeansAssign(embeddings: DataFrame): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
     // widenCpu: the per-row decimal norm + cell argmax in assignTo is
     // the CPU core and runs map-side on the scan — split-bound
     // parallelism (the srp parallelism-floor lesson, r15). Widened HERE
@@ -484,7 +478,6 @@ object Similarity {
     * local fixture; this form is ~0.2 s with identical output.)
     */
   def assignTo(embeddings: DataFrame, cents: DataFrame): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
     // assignTo itself never widens: the IVF probe paths route through
     // here and their plans are pinned exchange-pure (no shuffle may
     // carry a vector array). The kmeans callers widen their corpus side
@@ -606,7 +599,6 @@ object Similarity {
     */
   def annTopKIvf(embeddings: DataFrame, nQueries: Int = 8, k: Int = 5,
       nprobe: Int = 6): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
     // IVF "training": the per-label centroid codebook (tiny, broadcast)
     val cents = centroidVectors(embeddings)
     val withNorm = embeddings.select(col("vec_id"),
@@ -671,7 +663,6 @@ object Similarity {
     * hash-stable cross-engine encoding of the decision).
     */
   def semanticDedup(embeddings: DataFrame, minSim: Double = 0.3): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
     val cells = kmeansAssign(embeddings)
       .select(col("vec_id"), col("assigned_label").as("cell"))
       .localCheckpoint()
@@ -707,7 +698,6 @@ object Similarity {
     * BucketingSpec). Returns the cell directory written per vector.
     */
   def writeCellPartitioned(embeddings: DataFrame, path: String): Unit = {
-    GraftFunctions.register(embeddings.sparkSession)
     // train ONCE: this method runs two actions (the layout write and
     // the _centroids write), and each would otherwise re-execute the
     // full-corpus centroid aggregate — the most expensive pass of an
@@ -855,7 +845,6 @@ object Similarity {
   def annTopKFromLayout(spark: org.apache.spark.sql.SparkSession,
       path: String, nQueries: Int = 8, k: Int = 5,
       nprobe: Int = 2): DataFrame = {
-    GraftFunctions.register(spark)
     val centPath = new org.apache.hadoop.fs.Path(s"$path/_centroids")
     require(centPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(centPath),

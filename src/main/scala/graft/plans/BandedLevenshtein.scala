@@ -25,10 +25,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *
   * This is the (c)-tier Catalyst surface of the engine: a
   * `Rule[LogicalPlan]` injected via `SparkSessionExtensions`
-  * (GraftExtensions) for config-route users and via
-  * `spark.experimental.extraOptimizations` for the in-process route
-  * (GraftFunctions.register), so ad-hoc SQL gets the banded plan without
-  * knowing the 3-arg form exists. Scope: integer literals on the
+  * ([[graft.functions.GraftExtensions]], which every engine session and
+  * every `spark.sql.extensions` deployment installs at build time), so
+  * ad-hoc SQL gets the banded plan without knowing the 3-arg form
+  * exists. Scope: integer literals on the
   * comparison side; the rewrite result no longer matches the pattern, so
   * the rule is idempotent.
   */

@@ -611,11 +611,9 @@ object EventStreams {
     * the caller's session is already restored when the drain runs. One
     * lock spans save, set, start and restore, so two drains on one
     * session cannot interleave their save/restore. Drains stay on the
-    * caller's session rather than a `newSession()`:
-    * [[graft.functions.GraftFunctions.register]] is per session
-    * ([[mergeStream]] reaches `md5_base60` through Dedup), and a
-    * session's StreamingQueryListeners only see queries started through
-    * that session.
+    * caller's session rather than a `newSession()`: a session's
+    * StreamingQueryListeners only see queries started through that
+    * session.
     */
   private def drain(spark: SparkSession, stream: DataFrame,
       runRoot: String, perBatch: Long, schema: StructType,

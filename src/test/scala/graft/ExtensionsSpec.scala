@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The `spark.sql.extensions=graft.functions.GraftExtensions` deployment
-  * path: a session built with the extensions config must expose the
-  * custom expressions to PURE SQL with no `GraftFunctions.register` call
-  * anywhere — the route a thriftserver/notebook user takes.
+  * path: a session built with the extensions must expose the custom
+  * expressions to PURE SQL — the route a thriftserver/notebook user
+  * takes, and the one every engine session takes through
+  * `Sessions.builder`.
   */
 class ExtensionsSpec extends SparkSpec {
 
@@ -36,9 +37,8 @@ class ExtensionsSpec extends SparkSpec {
         "SELECT decimal_dot(array(1.5d, 2.0d), array(2.0d, 3.0d)) AS d")
         .collect()(0).getDouble(0)
       assert(dot == 9.0)
-      // the optimizer rule rides the SAME injection route (the s2
-      // session never called GraftFunctions.register, so this proves
-      // injectOptimizerRule, not the extraOptimizations fallback)
+      // the optimizer rule rides the SAME injection route
+      // (injectOptimizerRule, the only one that installs it)
       val q = s2.range(10).selectExpr("cast(id as string) AS a",
         "cast(id + 1 as string) AS b").filter("levenshtein(a, b) <= 1")
       val fired = q.queryExecution.optimizedPlan.collect { case n =>
@@ -95,7 +95,7 @@ class ExtensionsSpec extends SparkSpec {
       (for (x <- chars; y <- chars) yield x + y)
     val pairs = for (x <- strs; y <- strs) yield (x, y)
     // RDD-backed input: a LocalRelation would constant-fold the filter
-    // BEFORE the extraOptimizations batch runs, bypassing the rule
+    // BEFORE the operator-optimization batch runs, bypassing the rule
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(pairs, 4)).toDF("a", "b")
     // ground truth from Spark's own exact unbanded expression (a bare
@@ -115,6 +115,48 @@ class ExtensionsSpec extends SparkSpec {
       val want = exact.filter(_._3 <= k).map(t => (t._1, t._2))
         .groupBy(identity).view.mapValues(_.length).toMap
       assert(got == want, s"banded ≠ unbanded at k=$k")
+    }
+  }
+
+  test("newSession() of an engine session carries the functions and " +
+    "the banded-levenshtein rule") {
+    import org.apache.spark.sql.catalyst.expressions.Levenshtein
+    val fresh = spark.newSession()
+    assert(fresh ne spark)
+    def one(s: SparkSession, sql: String): Any = s.sql(sql).collect()(0).get(0)
+    for (sql <- Seq("SELECT md5_base60('x')",
+        "SELECT decimal_dot(array(1.5d, 2.0d), array(2.0d, 3.0d))"))
+      assert(one(fresh, sql) == one(spark, sql), sql)
+    // RDD-backed, so the filter reaches the operator-optimization batch
+    val df = fresh.createDataFrame(fresh.sparkContext.parallelize(
+      Seq(("ab", "abc"), ("ab", "xyz"), ("ab", "ab")), 2)).toDF("a", "b")
+    val q = df.filter("levenshtein(a, b) <= 1")
+    val banded = q.queryExecution.optimizedPlan.collect { case n =>
+      n.expressions.map(_.collect {
+        case l: Levenshtein if l.threshold.isDefined => 1
+      }.size).sum }.sum
+    assert(banded == 1, "the new session must band the predicate:\n" +
+      q.queryExecution.optimizedPlan)
+    assert(q.collect().map(_.getString(1)).sorted.toSeq == Seq("ab", "abc"))
+  }
+
+  test("Sessions.get fails fast on a running session that lacks the " +
+    "engine's extensions") {
+    val old = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      // a plain builder on the running context: no GraftExtensions
+      val plain = SparkSession.builder().getOrCreate()
+      assert(plain ne old)
+      val err = intercept[IllegalArgumentException](
+        Sessions.get("graft-foreign-session"))
+      assert(err.getMessage.contains(
+        "spark.sql.extensions=graft.functions.GraftExtensions"),
+        err.getMessage)
+    } finally {
+      SparkSession.setActiveSession(old)
+      SparkSession.setDefaultSession(old)
     }
   }
 }

@@ -6,68 +6,6 @@ import graft.operators.Multimodal.Media
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
 
-  private def payload(w: Int, h: Int, seed: Int, n: Int): Array[Byte] =
-    Multimodal.encodeFakeHeader(w, h,
-      Array.tabulate(n)(i => ((i * 31 + seed) % 256).toByte))
-
-  test("decodeAndFeaturize parses headers and emits normalized histograms") {
-    val media = Seq(
-      Media(1L, "image", payload(640, 480, 7, 1024)),
-      Media(2L, "audio", payload(0, 0, 3, 256)),
-      Media(3L, "image", Array[Byte](1, 2))) // truncated: shorter than header
-      .toDS()
-    val got = Multimodal.decodeAndFeaturize(media).collect()
-      .map(f => f.media_id -> f).toMap
-    assert(got(1L).width == 640 && got(1L).height == 480)
-    assert(got(1L).n_bytes == 1032)
-    assert(math.abs(got(1L).features.sum - 1.0) < 1e-9)
-    assert(got(2L).width == 0 && got(2L).features.length == 16)
-    assert(got(3L).width == 0 && got(3L).height == 0)
-  }
-
-  test("decode results are partition-invariant") {
-    val media = (1L to 64L).map(i =>
-      Media(i, "image", payload(i.toInt, 2 * i.toInt, i.toInt, 512))).toDS()
-    val one = Multimodal.decodeAndFeaturize(media.repartition(1))
-      .collect().map(f => f.media_id -> f.features.toSeq).toMap
-    val many = Multimodal.decodeAndFeaturize(media.repartition(16))
-      .collect().map(f => f.media_id -> f.features.toSeq).toMap
-    assert(one == many)
-  }
-
-  test("sampleFrameOffsets explodes strided frame indexes") {
-    val media = Seq(Media(9L, "video", payload(1, 1, 0, 256 * 25))).toDS()
-    val got = Multimodal.sampleFrameOffsets(media.toDF(), 256, 10)
-      .collect().map(r => (r.getLong(1), r.getLong(2))).sorted
-    assert(got.toSeq == Seq((0L, 8L), (10L, 8L + 2560L), (20L, 8L + 5120L)))
-  }
-
-  test("sampleFrameOffsets yields no frames for payloads shorter than one frame") {
-    val media = Seq(
-      Media(10L, "video", payload(1, 1, 0, 100)), // < 1 full frame
-      Media(11L, "video", payload(1, 1, 0, 256))).toDS()
-    val got = Multimodal.sampleFrameOffsets(media.toDF(), 256, 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(got.toSeq == Seq((11L, 0L, 8L)))
-  }
-
-  test("resize rewrites the header and composes with decode") {
-    val media = Seq(
-      Media(1L, "image", payload(16, 8, 5, 16 * 8)),
-      Media(2L, "image", Array[Byte](1, 2))) // truncated input
-      .toDS()
-    val resized = Multimodal.resize(media, 4, 4)
-    val decoded = Multimodal.decodeAndFeaturize(resized).collect()
-      .map(f => f.media_id -> f).toMap
-    assert(decoded(1L).width == 4 && decoded(1L).height == 4)
-    assert(decoded(1L).n_bytes == 8 + 16)
-    assert(decoded(2L).width == 4 && decoded(2L).n_bytes == 8 + 16)
-    // nearest-neighbor: output pixel (0,0) is source pixel (0,0)
-    val body = resized.filter(_.media_id == 1L).head().payload.drop(8)
-    val srcBody = payload(16, 8, 5, 16 * 8).drop(8)
-    assert(body(0) == srcBody(0))
-  }
-
   test("decodeImages recovers exact pattern pixels through a real PNG roundtrip") {
     val ids = Seq(0L, 1L, 5L, 12L, 123L)
     val media = ids.map(id =>
@@ -182,16 +120,6 @@ class MultimodalSpec extends SparkSpec {
       .withColumn("label", org.apache.spark.sql.functions.lit(1))
     val topk = operators.Similarity.annTopK(emb, 2, 3).collect()
     assert(topk.length == 6)
-  }
-
-  test("features flow into the Similarity operators as embeddings") {
-    val media = (0L to 9L).map(i =>
-      Media(i, "image", payload(8, 8, i.toInt, 512))).toDS()
-    val emb = Multimodal.featuresAsEmbeddings(
-      Multimodal.decodeAndFeaturize(media))
-      .withColumn("label", org.apache.spark.sql.functions.lit(1))
-    val topk = operators.Similarity.annTopK(emb, 2, 3).collect()
-    assert(topk.length == 6) // 2 queries x top-3
   }
 
   test("decodeVideoFrames: real per-frame PNG decode with strided sampling") {

@@ -7,12 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session (one per suite, lazy) + candle-frame fixture builder. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = Sessions.builder(master = "local[4]").appName("graft-test")
-      .getOrCreate()
-    functions.GraftFunctions.register(s)
-    s
-  }
+  lazy val spark: SparkSession =
+    Sessions.builder(master = "local[4]").appName("graft-test").getOrCreate()
 
   /** Minute-spaced candles from close prices; open/high/low/volume derived
     * (the strategies only read close — main.py:381,403-413).
