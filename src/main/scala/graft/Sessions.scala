@@ -7,8 +7,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
   * identical settings.
   */
 object Sessions {
-  /** Cores to use; the driver exports SPARK_GRAFT_CPUS. */
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Cores to use: SPARK_GRAFT_CPUS, else the cores this JVM may use. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
 
   /** Every engine session is built here, with [[graft.functions
     * .GraftExtensions]] installed: the engine's Catalyst functions and

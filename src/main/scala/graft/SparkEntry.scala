@@ -350,14 +350,9 @@ object SparkEntry {
     "session_window_agg" -> ((s, dir) =>
       TimeSeriesOps.sessionWindowAgg(Tables.table(s, dir, "events"), 30)),
 
-    // exact interpolated median (percentile) per group. widenCpu (r18):
-    // percentile's partial buffers collect every value — that update
-    // loop ran on the single-split scan's ONE task; hash-keyed widen
-    // spreads it over the slots and the 3-group merge stays tiny.
-    // Exact percentile is partitioning-invariant. No-op at scale.
+    // exact interpolated median (percentile) per group
     "median_prices" -> ((s, dir) =>
-      Tables.widenCpu(Tables.table(s, dir, "lineitem"), col("l_orderkey"))
-        .groupBy(col("l_returnflag"))
+      Tables.table(s, dir, "lineitem").groupBy(col("l_returnflag"))
         .agg(round(expr("percentile(l_extendedprice, 0.5)"), 6)
           .as("median_price"),
           count(lit(1)).as("n"))),
@@ -387,9 +382,7 @@ object SparkEntry {
       // WORSE both ways in reversed-order same-window A/Bs (1.52→1.95,
       // then 1.49→2.60 min-of-5) — with only 3 groups, merging 32
       // serialized sketch/percentile partial buffers per branch costs
-      // more than the single-task update loop it parallelizes (the
-      // opposite of median_prices, whose one exact-percentile agg DID
-      // win). Each site carries its own measured number.
+      // more than the single-task update loop it parallelizes.
       val li = Tables.table(s, dir, "lineitem")
       val sketches = li.groupBy(col("l_returnflag"))
         .agg(
@@ -804,12 +797,7 @@ object SparkEntry {
       // quality gate + token count FUSED into one projection over the scan
       // (no semi-join against a separate quality table — the score is a
       // per-row expression, so a filter is the same result for less work)
-      // widenCpu (r18): the fused quality+token projection is a second
-      // scan-rooted tokenize pass (the jaccardPairs branch widens
-      // internally via shingleTable) — without it the whole chain ran
-      // on the single-split scan's one task. No-op at scale.
-      Tables.widenCpu(docs, col("doc_id"))
-        .select(col("doc_id"), col("lang"),
+      docs.select(col("doc_id"), col("lang"),
           TextAnalysis.qualityCol(col("text")).as("quality"),
           size(TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
         .filter(col("quality") >= 0.5)

@@ -122,28 +122,48 @@ object Tables {
     java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]]()
 
   /** Scale-adaptive widen for CPU-dense per-row pipelines (tokenize +
-    * shingle + digest, codec decodes, embedding parses) that sit DIRECTLY
-    * on a parquet scan. Scan parallelism is split-bound — ceil(bytes /
-    * `spark.sql.files.maxPartitionBytes`) tasks at most, and row-group
-    * granularity can make it even lower (the driver fixtures are one
-    * row group per table, so every scan-rooted pipeline runs its whole
-    * expression chain on ONE task regardless of cores — StageProbe r18:
-    * dedup_keep_best's two hottest stages ran 1 and 2 tasks on a 32-slot
-    * box). The guide's fix for unsplittable/small inputs is to
-    * repartition right after the read (guide §2.5 "input skew"); this
-    * helper inserts that round-robin exchange ONLY when the source is
-    * provably too small for the scan to reach the session's slots by
-    * itself: estimated plan bytes < maxPartitionBytes × slots. At
-    * production scale the predicate is false (any TB-range table makes
-    * more splits than cores) and the plan is UNTOUCHED — no payload
-    * byte is ever shuffled for parallelism the scan already has. The
-    * width is the session's defaultParallelism, never a constant, so
-    * the same rule sizes correctly at any core count (the driver's
-    * low-core bench run included). Round-robin repartition is
-    * deterministic under task retry (sort-before-repartition is on by
-    * default — SPARK-23207) and every consumer of a widened frame is
-    * order-independent (aggregates / joins / per-row maps), so results
-    * are bit-identical — the oracle gate re-proves it per round.
+    * shingle + digest, codec decodes, embedding parses, DECIMAL
+    * partials) that sit DIRECTLY on a parquet scan. Scan parallelism is
+    * split-bound — ceil(bytes / `spark.sql.files.maxPartitionBytes`)
+    * tasks at most, and row-group granularity can make it lower (the
+    * sf0.1 fixtures are one row group per table, so a scan-rooted
+    * pipeline runs its whole expression chain on ONE task). This helper
+    * inserts a repartition to the session's defaultParallelism right
+    * after the read ONLY when the source is provably too small for the
+    * scan to reach the slots by itself: estimated plan bytes <
+    * maxPartitionBytes × slots. At production scale the predicate is
+    * false and the plan is UNTOUCHED. Round-robin repartition is
+    * deterministic under task retry (SPARK-23207) and every consumer of
+    * a widened frame is order-independent, so results are bit-identical.
+    *
+    * Every call site is kept because it measured a win at 4 cores
+    * (`SPARK_GRAFT_CPUS=4`, sf0.1, perfbench per-query medians, 5
+    * alternating pairs of widened vs. unwidened; ratio = unwidened ÷
+    * widened median, a win is a pair at ≥ 1.10);
+    * sites that did not win in 4 of 5 pairs were deleted. SCALE.md
+    * "widenCpu on 4 cores" has all 31 measured sites.
+    * {{{
+    * site (query it pays for)                        ratio  wins
+    * TextAnalysis.wide: lang_id, repetition          2.24   5/5
+    *   token_stats 1.72, quality 1.70, winnow 1.65,
+    *   dsir 1.43, lm_coverage 1.43, bm25 1.26,
+    *   bpe_tokens 1.05 (4/5 at ≥ 1.10)
+    * Dedup.shingleTable (decontaminate)              1.61   5/5
+    * Dedup.shingleArrays (merge_corpus_day)          1.52   4/5
+    * Dedup.duplicateSpans (dedup_spans)              1.48   5/5
+    * Dedup.simhashNearDupPairs, keyed                1.48   5/5
+    * Multimodal.syntheticImages (media_features)     1.92   5/5
+    * Multimodal.syntheticVideos (video_features)     1.62   5/5
+    * Similarity.nearDupPairs (embedding_neardup)     1.22   4/5
+    * Similarity.kmeansAssign (kmeans_assign)         1.30   5/5
+    * Analytics q1 / q9 / q11 / q14 / q18 / q20 /     1.35–1.81  ≥ 4/5
+    *   brand_stats, keyed on l_orderkey/l_partkey
+    * }}}
+    * Keyed form: HASH-repartition on `keys` instead of round-robin — no
+    * sort-before-repartition pass, and when `keys` is a subset of the
+    * downstream groupBy/Window clustering the widen exchange satisfies
+    * that distribution (SPARK-35703) and replaces the aggregate's own
+    * exchange. Callers must pick a key with ≫ slots distinct values.
     */
   def widenCpu(df: DataFrame, keys: Column*): DataFrame = {
     // Streaming frames pass through untouched: their micro-batch size is
@@ -157,17 +177,6 @@ object Tables {
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (bytes < BigInt(maxSplit) * slots) {
-      // Keyed form for aggregate/window pipelines: HASH-repartition on
-      // `keys` instead of round-robin. Two wins over the keyless form:
-      // (a) no sort-before-repartition pass on the (single) map task —
-      // hash placement is already retry-deterministic; (b) when `keys`
-      // is a subset of the downstream groupBy/Window clustering, the
-      // widen exchange SATISFIES that distribution (HashPartitioning ⊆
-      // ClusteredDistribution, SPARK-35703) and replaces the aggregate's
-      // own exchange — one shuffle buys both placement and parallelism.
-      // Callers must pick a key with ≫ slots distinct values (guide
-      // §2.5: 20–100× more keys than partitions) — lineitem callers use
-      // l_orderkey/l_partkey (150k/20k distinct at sf0.1).
       if (keys.isEmpty) df.repartition(slots)
       else df.repartition(slots, keys: _*)
     } else df

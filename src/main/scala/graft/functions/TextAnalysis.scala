@@ -48,7 +48,7 @@ object TextAnalysis {
     * single-row-group driver fixtures). See [[graft.Tables.widenCpu]]:
     * inserts a round-robin exchange only when the source is provably too
     * small for the scan to reach the session's slots; a no-op at
-    * production scale.
+    * production scale. All nine uses pay at 4 cores (the table there).
     */
   private def wide(docs: DataFrame): DataFrame = graft.Tables.widenCpu(docs)
 

@@ -29,11 +29,7 @@ object Analytics {
     * pre-aggregated partials per (returnflag, linestatus) — 6 groups.
     */
   def pricingSummary(spark: SparkSession, dir: String): DataFrame =
-    // widenCpu (r18): the scan-side partial aggregate is the whole query
-    // — four DECIMAL accumulators over every row — and the single-split
-    // bench fixture ran it on ONE task. Keyed on l_orderkey (150k
-    // distinct) so the widen is a plain hash exchange, no local sort.
-    // No-op at production scale; decimal sums are partitioning-invariant.
+    // widened: see the 4-core table in Tables.widenCpu
     Tables.widenCpu(table(spark, dir, "lineitem"), col("l_orderkey"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -122,11 +118,8 @@ object Analytics {
     */
   def largeQuantityOrders(spark: SparkSession, dir: String,
       minQty: Int = 250, k: Int = 100): DataFrame = {
-    // widenCpu on the HAVING aggregate's own key (r18): the widen
-    // exchange satisfies groupBy(l_orderkey)'s distribution, so the
-    // aggregate's exchange disappears — one shuffle buys placement AND
-    // parallelism where the single-split scan ran one task. No-op at
-    // production scale.
+    // widened on the aggregate's own key: see the 4-core table in
+    // Tables.widenCpu
     val big = Tables.widenCpu(Tables.table(spark, dir, "lineitem"),
         col("l_orderkey"))
       .groupBy(col("l_orderkey"))
@@ -256,10 +249,8 @@ object Analytics {
     */
   def dominantPartSuppliers(spark: SparkSession, dir: String,
       mult: Double = 3.0, minSuppliers: Int = 3): DataFrame = {
-    // widenCpu on l_partkey (r18): one hash exchange satisfies BOTH the
-    // (l_partkey, l_suppkey) aggregate (subset clustering) and the
-    // l_partkey window that follows — the plan's own two exchanges
-    // collapse into the widen. No-op at production scale.
+    // widened on l_partkey, which also clusters the aggregate and the
+    // window after it: see the 4-core table in Tables.widenCpu
     val l = Tables.widenCpu(table(spark, dir, "lineitem"),
       col("l_partkey"))
     val bySupp = l.groupBy(col("l_partkey"), col("l_suppkey"))
@@ -381,8 +372,7 @@ object Analytics {
 
   /** Broadcast dim⋈fact: per-brand sales stats (part is the small side). */
   def brandStats(spark: SparkSession, dir: String): DataFrame =
-    // widenCpu (r18): broadcast probe + DECIMAL partials off the
-    // single-split scan's one task. No-op at production scale.
+    // widened: see the 4-core table in Tables.widenCpu
     Tables.widenCpu(table(spark, dir, "lineitem"), col("l_partkey"))
       .join(broadcast(table(spark, dir, "part")),
         col("l_partkey") === col("p_partkey"))
@@ -531,8 +521,7 @@ object Analytics {
     */
   def promoRevenueShare(spark: SparkSession, dir: String): DataFrame = {
     val zero = lit(0).cast("decimal(24,8)")
-    // widenCpu (r18): part broadcasts, so probe + conditional DECIMAL
-    // revenue ran on the scan's one task at bench scale. No-op at scale.
+    // widened: see the 4-core table in Tables.widenCpu
     Tables.widenCpu(table(spark, dir, "lineitem"), col("l_partkey"))
       .join(table(spark, dir, "part"), col("p_partkey") === col("l_partkey"))
       .groupBy(year(col("l_shipdate")).cast("int").as("l_year"))
@@ -594,9 +583,7 @@ object Analytics {
     */
   def importantPartValues(spark: SparkSession, dir: String,
       fraction: Double = 0.0005): DataFrame =
-    // widenCpu on the aggregate key (r18): the per-part groupBy's
-    // exchange is satisfied by the widen's partitioning and the global
-    // scalar sum's partials parallelize too. No-op at production scale.
+    // widened on the aggregate key: see the 4-core table in Tables.widenCpu
     withTempViews(spark, Seq(
       "q11_lineitem" ->
         Tables.widenCpu(table(spark, dir, "lineitem"),
@@ -639,9 +626,7 @@ object Analytics {
   def nationProfitByYear(spark: SparkSession, dir: String): DataFrame = {
     val cost = (col("p_retailprice") * col("l_quantity") * lit(0.1))
       .cast("decimal(24,8)")
-    // widenCpu (r18): all four dimension joins broadcast, so the entire
-    // probe+DECIMAL-profit pipeline ran map-side on the single-split
-    // scan's ONE task. Hash-keyed widen spreads it; no-op at scale.
+    // widened: see the 4-core table in Tables.widenCpu
     Tables.widenCpu(table(spark, dir, "lineitem"), col("l_orderkey"))
       .join(table(spark, dir, "part"), col("p_partkey") === col("l_partkey"))
       .join(table(spark, dir, "supplier"),

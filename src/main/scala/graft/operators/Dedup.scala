@@ -72,11 +72,8 @@ object Dedup {
     * domain and agree bit-for-bit even in the (≈2⁻⁶⁵·n²) collision case.
     */
   private def shingleTable(docs: DataFrame, n: Int): DataFrame = {
-    // widenCpu: the tokenize→shingle→md5 chain is the pipeline's CPU,
-    // and it runs INSIDE the scan stage — split-bound parallelism, one
-    // task on single-row-group fixtures (StageProbe r18). Widen only
-    // when the scan provably can't reach the session's slots; no-op at
-    // production scale (see Tables.widenCpu).
+    // widened (the tokenize→shingle→md5 chain runs inside the scan
+    // stage): see the 4-core table in Tables.widenCpu
     graft.Tables.widenCpu(docs)
       .select(col("doc_id"), tokens(col("text")).as("t"))
       .select(col("doc_id"), shinglesFromTokens(col("t"), n).as("sh"))
@@ -99,8 +96,7 @@ object Dedup {
     // bit-compatible with every other sha consumer (jaccard
     // verification, LSH) by construction, not by parallel copy
     val carried = extra.map { case (nm, _) => col(nm) }
-    // same CPU-widen rationale as [[shingleTable]] — the whole-array
-    // form tokenizes and digests per row inside the scan stage too
+    // widened like [[shingleTable]]: see the 4-core table in Tables.widenCpu
     graft.Tables.widenCpu(docs).select(col("doc_id") +:
         extra.map { case (nm, e) => e.as(nm) } :+
         tokens(col("text")).as("t"): _*)
@@ -147,18 +143,7 @@ object Dedup {
         collect_list(struct(col("doc_id"), col("n_sh")))
       else udaf(new graft.functions.CappedDocList(maxDf.toInt))
         .apply(col("doc_id"), col("n_sh"))
-    // Keyed widen BEFORE the group (r18): the pair-explode + size prune
-    // + count partials run in the stage AFTER the groupBy's exchange,
-    // and AQE byte-coalesced that stage to 4 tasks at bench scale
-    // (StageProbe: 1.07 s of the query's 3.9 s on 4 tasks — bytes are
-    // the wrong proxy for the df-quadratic combination explode). The
-    // explicit REPARTITION_BY_NUM exchange is exempt from coalescing
-    // and satisfies groupBy(shash)'s distribution, so it REPLACES the
-    // aggregate's own exchange — same shuffle count, full width. No-op
-    // at production scale (widenCpu's size predicate), where the
-    // groupBy's own exchange keeps the cluster's shuffle width.
-    val pairs = graft.Tables.widenCpu(sh, col("shash"))
-      .groupBy(col("shash"))
+    val pairs = sh.groupBy(col("shash"))
       .agg(array_sort(collected).as("ds"))
       .filter(size(col("ds")) > 1)
       .select(explode(flatten(transform(col("ds"), (x, i) =>
@@ -308,14 +293,7 @@ object Dedup {
     // non-discriminative (standard LSH practice is to drop them — their
     // members still pair up via their other bands). Default keeps exact
     // semantics.
-    // Keyed widen before the bucket group (r18): same AQE-byte-coalesce
-    // disease as jaccardPairs — the member explode + candidate distinct
-    // run after this exchange and coalesce to a handful of tasks at
-    // bench scale. REPARTITION_BY_NUM is exempt and satisfies the
-    // group's distribution (no extra exchange). No-op at scale.
-    val members = graft.Tables
-      .widenCpu(buckets, col("band"), col("bucket"))
-      .groupBy(col("band"), col("bucket"))
+    val members = buckets.groupBy(col("band"), col("bucket"))
       .agg(array_sort(collect_list(col("doc_id"))).as("ds"))
       .filter(size(col("ds")) > 1 && size(col("ds")) <= maxBucketSize)
     val candidates = members
@@ -492,14 +470,8 @@ object Dedup {
     */
   def duplicateSpans(docs: DataFrame, k: Int = 5,
       minDf: Long = 2): DataFrame = {
-    // widenCpu (r18, second session): the tokenize + k-gram posexplode
-    // chain is this query's CPU and runs INSIDE the scan stage — one
-    // task on single-row-group fixtures (StageProbe: 0.82 of 1.33 s on
-    // ONE task). Keyless round-robin, same rationale as shingleTable;
-    // the df/island windows re-key on shash/doc_id right after, so
-    // results are bit-identical, and the PlanShapeSpec pin (one
-    // Generate, ≤2 hash exchanges) is untouched — round-robin is not a
-    // hash exchange. No-op at production scale.
+    // widened round-robin, so PlanShapeSpec's ≤2 hash exchanges hold:
+    // see the 4-core table in Tables.widenCpu
     val sh = graft.Tables.widenCpu(docs)
       .select(col("doc_id"), tokens(col("text")).as("t"))
       .filter(size(col("t")) >= k)
@@ -668,11 +640,8 @@ object Dedup {
         "60-bit simhash")
     val fp = simhashFingerprints(docs)
     val mask = (1L << bandBits) - 1
-    // Keyed widen on the band join key (r18): both self-join sides
-    // derive from this frame, so each side's widen exchange satisfies
-    // the join's distribution — the join and the pair filter/distinct
-    // run at full width instead of AQE's byte-coalesced handful of
-    // tasks. No-op at production scale.
+    // widened on the band join key, which both self-join sides share:
+    // see the 4-core table in Tables.widenCpu
     val banded = graft.Tables.widenCpu(fp
       .select(col("doc_id"), col("simhash"),
         explode(sequence(lit(0), lit(bands - 1))).as("band"))
@@ -711,13 +680,8 @@ object Dedup {
       maxDf: Long = Long.MaxValue): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val clusters = nearDupClusters(docs, n, minJaccard, maxDf = maxDf)
-    // widenCpu (r18): the quality projection is a second scan-rooted
-    // tokenize pass (the cluster branch widens inside shingleTable) —
-    // unwidened it ran on the single-split scan's one task. No-op at
-    // production scale.
-    val scored = graft.Tables.widenCpu(docs, col("doc_id"))
-      .select(col("doc_id"), TextAnalysis.qualityCol(col("text"))
-        .as("quality"))
+    val scored = docs.select(col("doc_id"),
+        TextAnalysis.qualityCol(col("text")).as("quality"))
       .join(clusters, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_rep"), col("doc_id")).as("cluster_rep"),

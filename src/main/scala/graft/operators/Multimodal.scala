@@ -90,11 +90,8 @@ object Multimodal {
   def syntheticImages(ids: DataFrame, idCol: String = "doc_id"): Dataset[Media] = {
     val spark = ids.sparkSession
     import spark.implicits._
-    // widenCpu (r18): the codec encode AND the downstream decode both
-    // run at this frame's partitioning — split-bound (one task on the
-    // single-row-group fixtures) without the widen. The id column is
-    // bytes-trivial to shuffle; no-op at production scale, where media
-    // arrives from a many-split binary scan.
+    // widened (the encode and the downstream decode both run at this
+    // frame's partitioning): see the 4-core table in Tables.widenCpu
     graft.Tables.widenCpu(ids.select(col(idCol).cast("long")))
       .as[Long].mapPartitions { it =>
       it.map { id =>
@@ -305,9 +302,7 @@ object Multimodal {
   def syntheticAudio(ids: DataFrame, idCol: String = "doc_id"): Dataset[Media] = {
     val spark = ids.sparkSession
     import spark.implicits._
-    // widenCpu: see syntheticImages
-    graft.Tables.widenCpu(ids.select(col(idCol).cast("long")))
-      .as[Long].mapPartitions { it =>
+    ids.select(col(idCol).cast("long")).as[Long].mapPartitions { it =>
       it.map(id => Media(id, "audio/wav",
         encodeWav(id, 400 + (id % 37).toInt)))
     }
@@ -404,7 +399,7 @@ object Multimodal {
   def syntheticVideos(ids: DataFrame, idCol: String = "doc_id"): Dataset[Media] = {
     val spark = ids.sparkSession
     import spark.implicits._
-    // widenCpu: see syntheticImages
+    // widened: see the 4-core table in Tables.widenCpu
     graft.Tables.widenCpu(ids.select(col(idCol).cast("long")))
       .as[Long].mapPartitions { it =>
       it.map { id =>

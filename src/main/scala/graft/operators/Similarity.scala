@@ -229,8 +229,7 @@ object Similarity {
     */
   def nearDupPairs(embeddings: DataFrame, minSim: Double = 0.3): DataFrame = {
     // norms once per vector (n rows), not once per pair (n² rows);
-    // widenCpu parallelizes the per-row decimal norm out of the
-    // split-bound scan stage (no-op at production scale)
+    // widened: see the 4-core table in Tables.widenCpu
     val withNorm = graft.Tables.widenCpu(embeddings)
       .select(col("label"), col("vec_id"),
         col("embedding"), sqrt(normSqDecimal(col("embedding"))).as("nrm"))
@@ -440,11 +439,8 @@ object Similarity {
     * join and one (label, pos) aggregate, no corpus shuffle.
     */
   def kmeansAssign(embeddings: DataFrame): DataFrame = {
-    // widenCpu: the per-row decimal norm + cell argmax in assignTo is
-    // the CPU core and runs map-side on the scan — split-bound
-    // parallelism (the srp parallelism-floor lesson, r15). Widened HERE
-    // rather than in assignTo so the pinned-exchange-pure IVF probe
-    // paths stay untouched. No-op at production scale.
+    // widened here, not in assignTo, so the IVF probe paths keep their
+    // pinned exchanges; see the 4-core table in Tables.widenCpu
     assignTo(graft.Tables.widenCpu(embeddings),
       centroidVectors(embeddings))
   }
@@ -559,8 +555,7 @@ object Similarity {
         col("assigned_label").as("label")).localCheckpoint()
       val relabeled = embeddings.select(col("vec_id"), col("embedding"))
         .join(labels, Seq("vec_id"))
-      assigned = assignTo(graft.Tables.widenCpu(embeddings),
-        centroidVectors(relabeled))
+      assigned = assignTo(embeddings, centroidVectors(relabeled))
       i += 1
     }
     assigned.select(col("vec_id"), col("assigned_label").as("cluster"),

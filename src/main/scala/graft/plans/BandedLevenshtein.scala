@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Cast, Expression,
   Levenshtein, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.BINARY_COMPARISON
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Optimizer rule: rewrite a thresholded edit-distance predicate into
@@ -62,8 +63,10 @@ object BandedLevenshteinRule extends Rule[LogicalPlan] {
   private def banded(l: Expression, r: Expression, k: Int): Expression =
     GreaterThanOrEqual(Levenshtein(l, r, Some(Literal(k))), Literal(0))
 
+  // pruned: a plan with no comparison anywhere is skipped without a walk
   override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
+    plan.transformAllExpressionsWithPruning(
+        _.containsPattern(BINARY_COMPARISON)) {
       case LessThanOrEqual(Lev(l, r), IntK(k)) if k >= 0 => banded(l, r, k)
       case GreaterThanOrEqual(IntK(k), Lev(l, r)) if k >= 0 =>
         banded(l, r, k)

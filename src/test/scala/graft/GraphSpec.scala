@@ -24,12 +24,13 @@ class GraphSpec extends SparkSpec {
 
   test("auto-widened iteration shuffles produce bit-identical ranks " +
       "and actually widen the exchanges") {
-    // rowsPerPartition=1 forces width = max(conf, |E|) on the toy graph —
-    // the path a 200M-edge build takes — and the integer fixed-point
-    // contract means the widened plan must reproduce the default plan's
-    // ranks exactly. Also witness the width actually applied: the plan
-    // must carry a user-origin repartition at |E| partitions (the
-    // default-path plan carries none).
+    // The divisor puts the width at about twice the session width, past
+    // the conf floor — the path a 200M-edge build takes — without the
+    // |E|-wide near-empty stages that rowsPerPartition=1 forced. The
+    // integer fixed-point contract means the widened plan must reproduce
+    // the default plan's ranks exactly. Also witness the width actually
+    // applied: the plan must carry user-origin repartitions at the
+    // rule's width (the default-path plan carries none).
     val dir = "/root/testdata/sf0.001"
     val fwd = spark.read.parquet(s"$dir/orders.parquet")
       .join(spark.read.parquet(s"$dir/lineitem.parquet"),
@@ -38,13 +39,15 @@ class GraphSpec extends SparkSpec {
         (col("l_suppkey") * 2 + 1).as("dst"))
       .distinct()
     val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-    val default = GraphOps.pageRankEdges(edges, 3).collect().toSet
-    val widened = GraphOps.pageRankEdges(edges, 3, rowsPerPartition = 1)
-    assert(widened.collect().toSet == default,
-      "widened iteration shuffles changed fixed-point ranks")
     val nEdges = edges.count()
     val conf = spark.sessionState.conf.numShufflePartitions
-    assert(nEdges > conf, s"fixture too small to force widening: $nEdges")
+    assert(nEdges > 2 * conf, s"fixture too small to force widening: $nEdges")
+    val rpp = nEdges / (2 * conf)
+    val expWidth = math.ceil(nEdges.toDouble / rpp).toInt
+    val default = GraphOps.pageRankEdges(edges, 3).collect().toSet
+    val widened = GraphOps.pageRankEdges(edges, 3, rowsPerPartition = rpp)
+    assert(widened.collect().toSet == default,
+      "widened iteration shuffles changed fixed-point ranks")
     // witness on the OPTIMIZED LOGICAL plan: the adaptive physical plan
     // wraps its stages in a leaf-like AdaptiveSparkPlanExec that a
     // TreeNode.collect cannot see through
@@ -54,8 +57,9 @@ class GraphSpec extends SparkSpec {
             .RepartitionByExpression => r.optNumPartitions
       }.flatten
     val widths = repartitionWidths(widened)
-    assert(widths.nonEmpty && widths.forall(_ == nEdges.toInt),
-      s"expected |E|=$nEdges-wide repartitions, saw $widths")
+    assert(widths.nonEmpty && widths.forall(_ == expWidth),
+      s"expected ceil(|E|=$nEdges / rpp=$rpp) = $expWidth-wide " +
+        s"repartitions, saw $widths")
     assert(repartitionWidths(GraphOps.pageRankEdges(edges, 3)).isEmpty,
       "default path must not carry user-origin repartitions")
   }
