@@ -160,7 +160,9 @@ object SparkEntry {
     "q22_idle_balance" -> ((s, dir) => Analytics.idleCustomerBalance(s, dir)),
 
     // ---- S: candle construction (event-time resample of `events`) --------
-    "candles" -> ((s, dir) => Tables.candles(s, dir)),
+    // the derivation itself, timed as a resample; every other candle
+    // query reads its stored series through Tables.candles
+    "candles" -> ((s, dir) => Tables.candlesFromEvents(s, dir)),
     // multi-resolution resample: same plan at any bar width (5-minute and
     // daily bars over the same events — reference README.md:17-29 implies
     // minute input re-aggregated to coarser resolutions)

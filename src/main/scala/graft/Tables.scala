@@ -91,7 +91,9 @@ object Tables {
     * the memo emulates it: the analyzed frame (an immutable lazy plan)
     * is shared per (session, dir, table). Sound because the driver
     * testdata dirs are immutable for a session's lifetime — nothing in
-    * the engine writes into an sfDir — and weakly keyed on the SESSION
+    * the engine writes into an sfDir; the same assumption carries the
+    * candle layout that every candle query reads ([[candles]]) — and
+    * weakly keyed on the SESSION
     * OBJECT with SOFT-referenced values: a DataFrame strongly references
     * its session, so a strong value would pin its own WeakHashMap key
     * forever (the documented WeakHashMap value→key trap); behind a
@@ -212,19 +214,33 @@ object Tables {
         timestamp_millis(col("time")).as("ts"),
         col("open"), col("high"), col("low"), col("close"), col("volume"))
 
-  /** Multi-symbol candle series derived from the driver's `events` table —
-    * the OHLCV stand-in (FIXTURES.md §B): `event_type` is the symbol, `value`
+  /** Multi-symbol candle series of a corpus directory — the one series
+    * every candle consumer reads, as the reference loads its OHLCV frame
+    * once and runs every strategy over it (main.py:296-311). Returns the
+    * stored layout of [[bucketedCandlesFor]]: [[candlesFromEvents]]
+    * derived once per (JVM, directory), bucketed on `symbol` and sorted
+    * on `ts`, so symbol-clustered consumers (windows, groupBy, the
+    * backtest fold) read it without an Exchange. Sound under the same
+    * immutable-directory assumption as [[table]]'s memo.
+    */
+  def candles(spark: SparkSession, sfDir: String): DataFrame =
+    spark.table(bucketedCandlesFor(spark, sfDir))
+
+  /** The candle derivation over the driver's `events` table — the OHLCV
+    * stand-in (FIXTURES.md §B): `event_type` is the symbol, `value`
     * is the price, candles are 1-hour event-time tumbling windows (the
     * resampling the reference's minute-resolution input implies,
     * README.md:17-29). open/close are first/last price in the bucket by
     * arrival order (`event_id` — unique, so deterministic under any
-    * partitioning); volume = trade count.
+    * partitioning); volume = trade count. Its callers are the layout
+    * writer ([[bucketedCandlesFor]]) and the declared `candles` query,
+    * which times the resample itself.
     *
     * Scale: one hash-shuffle on (symbol, hour); Catalyst plans
     * partial_min_by/max_by map-side, so the exchange carries one row per
     * (symbol, hour) per input partition, not the raw events.
     */
-  def candles(spark: SparkSession, sfDir: String): DataFrame =
+  def candlesFromEvents(spark: SparkSession, sfDir: String): DataFrame =
     table(spark, sfDir, "events")
       // a candle is defined over PRICED, TIMED events only — and the
       // filter is also what keeps the two engines aligned on NULLs:
@@ -245,18 +261,19 @@ object Tables {
         count(lit(1)).cast(DoubleType).as("volume"))
 
   /** Multi-resolution OHLCV resample — the parameterized form of
-    * [[candles]] (reference intent: minute-resolution input re-aggregated
-    * to coarser bars, README.md:17-29). Bucket = `minutes`-wide tumbling
-    * event-time window via integral floor-division on epoch-microseconds
-    * (identical arithmetic in the DuckDB oracle, [[candlesAtSql]] — unlike
-    * date_trunc, whose DuckDB 'day' form returns DATE, not TIMESTAMP).
-    * Same one-shuffle partial-aggregate shape as [[candles]]; resolution
-    * only changes the group count, never the plan.
+    * [[candlesFromEvents]] (reference intent: minute-resolution input
+    * re-aggregated to coarser bars, README.md:17-29). Bucket =
+    * `minutes`-wide tumbling event-time window via integral
+    * floor-division on epoch-microseconds (identical arithmetic in the
+    * DuckDB oracle, [[candlesAtSql]] — unlike date_trunc, whose DuckDB
+    * 'day' form returns DATE, not TIMESTAMP). Same one-shuffle
+    * partial-aggregate shape as [[candlesFromEvents]]; resolution only
+    * changes the group count, never the plan.
     */
   def candlesAt(spark: SparkSession, sfDir: String, minutes: Int): DataFrame = {
     val bucketUs = minutes * 60000000L
     table(spark, sfDir, "events")
-      // same NULL discipline as [[candles]]
+      // same NULL discipline as [[candlesFromEvents]]
       .filter(col("value").isNotNull && col("ts").isNotNull)
       .groupBy(
         col("event_type").as("symbol"),
@@ -328,16 +345,6 @@ object Tables {
       .sortBy(bucketCol, sortCol)
       .saveAsTable(tableName)
 
-  /** Build-once/read-many fixture: the [[candles]] series for a corpus
-    * directory, materialized through [[writeBucketed]] on FIRST use per
-    * JVM and memoized — the lifecycle a real deployment runs (one layout
-    * write amortized over every later symbol-clustered read). Returns
-    * the catalog table name; `spark.table(name)` scans it WITHOUT an
-    * Exchange for symbol-clustered operators. Keyed by the DIRECTORY
-    * string (content-bound — unlike a canonicalized-plan key, two
-    * distinct corpora can never share an entry), same contract as
-    * [[graft.operators.Similarity.cellLayoutFor]].
-    */
   /** Injective catalog/filesystem-safe key for a corpus directory:
     * sanitized path ([A-Za-z0-9_] — legal in both table identifiers and
     * file names) plus a 6-byte MD5 of the raw path, so two dirs that
@@ -351,25 +358,35 @@ object Tables {
         .digest(d.getBytes("UTF-8")).take(6)
         .map("%02x".format(_)).mkString
 
-  private val bucketedCandlesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Build-once/read-many layout behind [[candles]]: the
+    * [[candlesFromEvents]] series for a corpus directory, written
+    * through [[writeBucketed]] when the session's catalog does not have
+    * it yet — once per (JVM, directory), plus once more after a session
+    * stop/rebuild leaves an empty catalog — and read by every candle
+    * consumer afterwards. Returns the catalog table name;
+    * `spark.table(name)` scans it WITHOUT an Exchange for
+    * symbol-clustered operators. Keyed by the DIRECTORY string
+    * (content-bound — unlike a canonicalized-plan key, two distinct
+    * corpora can never share an entry), same contract as
+    * [[graft.operators.Similarity.cellLayoutFor]].
+    *
+    * Single-flight: the existence check and the rebuild run under one
+    * lock per directory, so concurrent queries on one session never
+    * rewrite the path twice or read it while it is being rewritten by
+    * another caller of this function.
+    */
   def bucketedCandlesFor(spark: SparkSession, sfDir: String): String = {
-    val tbl = bucketedCandlesCache.computeIfAbsent(sfDir, d => {
-      val name = s"candles_bkt_${dirKey(d)}"
-      val path = new java.io.File("spark-warehouse", name).getAbsolutePath
-      writeBucketed(candles(spark, d), name, path)
-      name
-    })
-    // the memoized NAME is bound to the in-memory catalog of the session
-    // that built it — after a session stop/rebuild in the same JVM the
-    // new catalog is empty, so re-register (rebuild) rather than hand
-    // back a dangling identifier
-    if (!spark.catalog.tableExists(tbl)) {
-      val path = new java.io.File("spark-warehouse", tbl).getAbsolutePath
-      writeBucketed(candles(spark, sfDir), tbl, path)
+    val name = s"candles_bkt_${dirKey(sfDir)}"
+    bucketedCandlesLocks.computeIfAbsent(sfDir, _ => new Object).synchronized {
+      if (!spark.catalog.tableExists(name))
+        writeBucketed(candlesFromEvents(spark, sfDir), name,
+          new java.io.File("spark-warehouse", name).getAbsolutePath)
     }
-    tbl
+    name
   }
+
+  private val bucketedCandlesLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Build-once/read-many fixture for the Z-ORDER layout (the 2-D
     * analog of [[bucketedCandlesFor]]): the events table rewritten

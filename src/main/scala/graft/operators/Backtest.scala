@@ -2,7 +2,7 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 
 /** The one operator that is not stateless relational algebra: the
@@ -22,12 +22,15 @@ import org.apache.spark.sql.functions._
   *   - any open position is force-liquidated at the last row's close
   *     (main.py:432-439) — the TRUE last row, even when the loop broke early.
   *
-  * Spark mapping: MA columns come from built-in windows (one shuffle on
-  * symbol); the fold runs via `groupByKey(symbol).flatMapSortedGroups(ts)` —
-  * parallel across symbols, sequential within one, which is exactly the
-  * semantics. At 100 TB / many symbols each group is one task's stream; no
-  * state ever crosses executors. The reference is the 1-symbol degenerate
-  * case.
+  * Spark mapping: MA columns come from built-in windows over the
+  * symbol-clustered candle series; the fold runs per symbol group in `ts`
+  * order (`flatMapSortedGroups`) — parallel across symbols, sequential
+  * within one, which is exactly the semantics. The groups key on the
+  * `symbol` column itself, so the window's clustering and its
+  * (symbol, ts) sort already satisfy the fold and Catalyst plans no
+  * Exchange for it (none at all over the bucketed candle layout). At
+  * 100 TB / many symbols each group is one task's stream; no state ever
+  * crosses executors. The reference is the 1-symbol degenerate case.
   */
 object Backtest {
 
@@ -62,35 +65,65 @@ object Backtest {
   def positions(candles: DataFrame, cfg: Config = Config()): Dataset[Position] = {
     val spark = candles.sparkSession
     import spark.implicits._
+    foldBySymbol(candles, cfg) { (symbol, rows) => fold(symbol, rows, cfg) }
+  }
+
+  /** Per-symbol scalar outcome (main.py:441-443): trade count, final
+    * budget after all closes + liquidation, and ROI, computed by
+    * [[summarize]] inside the same ordered fold as [[positions]] — one
+    * row per symbol, no second aggregation. Symbols with zero
+    * crossovers produce no row (the reference's zero-trade run returns
+    * the untouched budget — callers treat a missing symbol as ROI 0).
+    */
+  def summary(candles: DataFrame, cfg: Config = Config()): DataFrame = {
+    val spark = candles.sparkSession
+    import spark.implicits._
+    foldBySymbol(candles, cfg) { (symbol, rows) =>
+      val (_, ps) = foldCore(rows, cfg)
+      if (ps.isEmpty) Iterator.empty
+      else {
+        val s = summarize(ps, cfg)
+        Iterator((symbol, s.num_trades, s.final_value, s.roi))
+      }
+    }.toDF("symbol", "num_trades", "final_value", "roi")
+      .select(col("symbol"), col("num_trades"),
+        round(col("final_value"), 6).as("final_value"),
+        round(col("roi"), 6).as("roi"))
+  }
+
+  /** Trade count, final value and ROI of one symbol's closed positions.
+    * The per-position pnl term is rounded to DECIMAL(·,10) HALF_UP and
+    * summed exactly, then turned back to a double — so the outcome is
+    * independent of position order. Shared by [[summary]] and
+    * [[BacktestAggregator]], which therefore answer bit-identically.
+    */
+  private[operators] def summarize(
+      positions: Seq[Position], cfg: Config): BacktestAggregator.BtOut = {
+    val pnl = positions.foldLeft(BigDecimal(0)) { (acc, p) =>
+      acc + BigDecimal(p.exit_price.get * cfg.perTrade / p.entry_price -
+        cfg.perTrade).setScale(10, BigDecimal.RoundingMode.HALF_UP)
+    }.toDouble
+    BacktestAggregator.BtOut(positions.size.toLong,
+      cfg.initialBudget + pnl, pnl / cfg.initialBudget * 100.0)
+  }
+
+  /** The moving-average rows grouped on the `symbol` column and fed to
+    * `f` in `ts` order. Grouping on the attribute (not a deserialized
+    * key, as `groupByKey` would) is what lets the window's output
+    * partitioning satisfy the grouping without another shuffle.
+    */
+  private def foldBySymbol[U: Encoder](
+      candles: DataFrame, cfg: Config)(
+      f: (String, Iterator[MaRow]) => Iterator[U]): Dataset[U] = {
+    val spark = candles.sparkSession
+    import spark.implicits._
     TradingOps.movingAverages(candles, cfg.shortN, cfg.longN)
       .select(col("symbol"), col("ts"), col("close"),
               col("short_ma"), col("long_ma"))
-      .as[MaRow]
-      .groupByKey(_.symbol)
-      .flatMapSortedGroups(col("ts")) { (symbol, rows) => fold(symbol, rows, cfg) }
-  }
-
-  /** Per-symbol scalar outcome (main.py:441-443): final budget after all
-    * closes + liquidation, and ROI. Derived relationally from [[positions]]
-    * (every position is closed, so
-    * final = initial + Σ (perTrade/entry·exit − perTrade)); the sum
-    * accumulates in DECIMAL so it is partition-order independent.
-    * Symbols with zero crossovers produce no row (the reference's
-    * zero-trade run returns the untouched budget — callers treat a missing
-    * symbol as ROI 0).
-    */
-  def summary(candles: DataFrame, cfg: Config = Config()): DataFrame =
-    positions(candles, cfg).toDF()
       .groupBy(col("symbol"))
-      .agg(
-        count(lit(1)).as("num_trades"),
-        sum((col("exit_price") * lit(cfg.perTrade) / col("entry_price") -
-             lit(cfg.perTrade)).cast("decimal(28,10)"))
-          .cast("double").as("pnl"))
-      .select(
-        col("symbol"), col("num_trades"),
-        round(lit(cfg.initialBudget) + col("pnl"), 6).as("final_value"),
-        round(col("pnl") / lit(cfg.initialBudget) * 100.0, 6).as("roi"))
+      .as[String, MaRow]
+      .flatMapSortedGroups(col("ts"))(f)
+  }
 
   private def fold(
       symbol: String, rows: Iterator[MaRow], cfg: Config): Iterator[Position] =

@@ -34,17 +34,7 @@ object BacktestAggregator {
     override def finish(b: List[BtIn]): BtOut = {
       val rows = b.sortBy(_.ts.getTime).iterator
         .map(r => MaRow(null, r.ts, r.close, r.short_ma, r.long_ma))
-      val (_, positions) = Backtest.foldCore(rows, cfg)
-      // identical arithmetic path to Backtest.summary: per-position term
-      // cast to DECIMAL(·,10) HALF_UP, exact sum, back to double, then
-      // double add/divide — bit-for-bit the relational result.
-      val pnl = positions.foldLeft(BigDecimal(0)) { (acc, p) =>
-        acc + BigDecimal(p.exit_price.get * cfg.perTrade / p.entry_price -
-          cfg.perTrade).setScale(10, BigDecimal.RoundingMode.HALF_UP)
-      }.toDouble
-      BtOut(positions.size.toLong,
-        cfg.initialBudget + pnl,
-        pnl / cfg.initialBudget * 100.0)
+      Backtest.summarize(Backtest.foldCore(rows, cfg)._2, cfg)
     }
     // buffer is an internal spill format — kryo keeps it schema-free;
     // input/output stay fully typed (product encoders)

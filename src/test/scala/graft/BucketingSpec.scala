@@ -69,11 +69,37 @@ class BucketingSpec extends SparkSpec {
 
   test("candles_bucketed (declared) equals window_leads off the plain " +
     "candle derivation") {
+    // both declared queries read the stored layout (Tables.candles), so
+    // the witness is the same window over the plain derivation
     val dir = "/root/testdata/sf0.001"
-    def rows(q: String) = SparkEntry.queries(q)(spark, dir)
-      .collect().map(_.toSeq).sortBy(_.toString).toSeq
-    assert(rows("candles_bucketed") == rows("window_leads"),
-      "bucketed-storage path must reproduce the plain path bit-for-bit")
+    def rows(df: DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.toString).toSeq
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("symbol")).orderBy(col("ts"))
+    val plain = rows(Tables.candlesFromEvents(spark, dir)
+      .select(col("symbol"), col("ts"), col("close"),
+        lead(col("close"), 1).over(w).as("next_close"),
+        first_value(col("close")).over(w).as("first_close"),
+        nth_value(col("close"), 3).over(w).as("third_close")))
+    for (q <- Seq("candles_bucketed", "window_leads"))
+      assert(rows(SparkEntry.queries(q)(spark, dir)) == plain,
+        s"$q must reproduce the plain derivation's window bit-for-bit")
+  }
+
+  test("Tables.candles reads the stored layout and equals the derivation " +
+    "row for row, with the same column names and types") {
+    val dir = "/root/testdata/sf0.001"
+    val stored = Tables.candles(spark, dir)
+    val derived = Tables.candlesFromEvents(spark, dir)
+    assert(stored.schema.map(f => (f.name, f.dataType)) ==
+      derived.schema.map(f => (f.name, f.dataType)))
+    assert(stored.queryExecution.analyzed.toString
+      .contains(Tables.bucketedCandlesFor(spark, dir)),
+      "Tables.candles must scan the bucketed layout, not re-aggregate")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
+    val want = rows(derived)
+    assert(want.size > 100, s"fixture too small: ${want.size} candles")
+    assert(rows(stored).sortBy(_.toString) == want.sortBy(_.toString))
   }
 
   test("bucketedCandlesFor re-registers its table when the catalog lost " +
@@ -81,14 +107,61 @@ class BucketingSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val tbl = Tables.bucketedCandlesFor(spark, dir)
     val before = spark.table(tbl).count()
-    // simulate the stale-memo hazard: the JVM-wide cache still holds the
-    // name, but the (in-memory) catalog no longer has the table — the
-    // state a session stop/rebuild leaves behind
+    // simulate the stale-name hazard: callers hold the name, but the
+    // (in-memory) catalog no longer has the table — the state a session
+    // stop/rebuild leaves behind
     spark.sql(s"DROP TABLE $tbl")
     val again = Tables.bucketedCandlesFor(spark, dir)
     assert(again == tbl, "key derivation must be deterministic")
     assert(spark.table(again).count() == before,
       "the fixture must rebuild, not hand back a dangling identifier")
+  }
+
+  test("bucketedCandlesFor rebuilds single-flight: two queries sharing " +
+    "one session rewrite a lost layout exactly once") {
+    val dir = "/root/testdata/sf0.001"
+    val tbl = Tables.bucketedCandlesFor(spark, dir)
+    val want = Tables.candlesFromEvents(spark, dir).count()
+    spark.sql(s"DROP TABLE $tbl")
+    // every saveAsTable of the layout runs one CTAS command on its name
+    val writes = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = qe.logical match {
+        case c: org.apache.spark.sql.execution.command
+            .CreateDataSourceTableAsSelectCommand
+            if c.table.identifier.table == tbl => writes.incrementAndGet()
+        case _ if qe.logical.toString.contains("single_flight_sentinel") =>
+          sentinel.countDown()
+        case _ =>
+      }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val start = new java.util.concurrent.CyclicBarrier(2)
+      val counts = Seq.fill(2)(pool.submit(() => {
+        start.await()
+        Tables.candles(spark, dir).count()
+      })).map(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+      assert(counts == Seq(want, want))
+      // listener delivery is async but ordered: once an execution that
+      // started after both queries returned is delivered, every write
+      // they made has been counted
+      spark.range(1).toDF("single_flight_sentinel").collect()
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "sentinel execution never reached the listener")
+      assert(writes.get == 1,
+        s"the lost layout was rewritten ${writes.get} times, not once")
+    } finally {
+      pool.shutdown()
+      spark.listenerManager.unregister(listener)
+    }
   }
 
   test("date-partitioned writes prune partitions at scan (sorted-index analog)") {

@@ -85,9 +85,10 @@ class PlanShapeSpec extends SparkSpec {
 
   test("bollinger_bands runs all frames in one symbol exchange") {
     val plan = finalPlan(SparkEntry.queries("bollinger_bands")(spark, dir))
-    // candle agg shuffles on (symbol, hour); the window re-shuffles on
-    // symbol. Any third exchange means a frame/order mismatch split the
-    // Window into multiple sorts.
+    // over the bucketed candle layout the window needs no exchange; over
+    // a plain candle derivation it would take two (the agg's (symbol,
+    // hour) shuffle, the window's symbol shuffle). Any third exchange
+    // means a frame/order mismatch split the Window into multiple sorts.
     assert(count(plan, "Exchange hashpartitioning") <= 2,
       s"moments + donchian must share one Window exchange:\n$plan")
     assert(count(plan, "Window ") == 1,
@@ -324,6 +325,20 @@ class PlanShapeSpec extends SparkSpec {
         s"Exchange means the layout stopped paying for itself:\n$plan")
     assert(count(plan, "Window \\[[^\\]]*\\], \\[\\], \\[") == 0,
       s"window must stay partitioned by symbol:\n$plan")
+  }
+
+  test("the backtest folds and max_drawdown plan ZERO Exchanges over " +
+    "the bucketed candle layout") {
+    // the fold groups on the symbol attribute (not a deserialized key),
+    // so the window's symbol clustering and (symbol, ts) sort satisfy it;
+    // the summary is computed inside the fold, so there is no second
+    // groupBy either
+    for (n <- Seq("backtest_positions", "backtest_positions_capped",
+        "backtest_summary", "backtest_udaf", "max_drawdown")) {
+      val plan = finalPlan(SparkEntry.queries(n)(spark, dir))
+      assert(count(plan, "Exchange ") == 0,
+        s"$n must read the candle layout's clustering as is:\n$plan")
+    }
   }
 
   test("events_zordered pushes BOTH 2-D predicates to the scan and " +

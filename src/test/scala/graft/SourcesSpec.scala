@@ -76,7 +76,7 @@ class SourcesSpec extends SparkSpec {
     // 'hour' for any post-epoch timestamp — the property that lets the
     // multi-resolution form share oracles with the fixed-hour one
     val dir = "/root/testdata/sf0.001"
-    val a = Tables.candles(spark, dir)
+    val a = Tables.candlesFromEvents(spark, dir)
     val b = Tables.candlesAt(spark, dir, 60)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     // daily bars: one row per (symbol, day), volume sums to event count

@@ -78,7 +78,7 @@ class StreamingSpec extends SparkSpec {
     // compare on the common (closed) prefix
     runToMemory(stream, "stream_candles", "append")
     val streamed = spark.table("stream_candles")
-    val batch = Tables.candles(spark, dir)
+    val batch = Tables.candlesFromEvents(spark, dir)
     val joined = streamed.alias("s")
       .join(batch.alias("b"), Seq("symbol", "ts"))
       .filter(col("s.open") === col("b.open") &&
@@ -95,7 +95,8 @@ class StreamingSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val got = EventStreams.streamCandles(spark, dir)
       .collect().map(_.toSeq).toSet
-    val want = Tables.candles(spark, dir).collect().map(_.toSeq).toSet
+    val want = Tables.candlesFromEvents(spark, dir)
+      .collect().map(_.toSeq).toSet
     assert(got == want,
       s"declared streaming candles diverged: stream-only=${got -- want}, " +
         s"batch-only=${want -- got}")
@@ -453,7 +454,7 @@ class StreamingSpec extends SparkSpec {
     assert(emitted.groupBy("symbol", "ts").count()
       .filter(col("count") > 1).isEmpty, "duplicate candles after resume")
     // value parity: every emitted candle equals its batch counterpart
-    val batch = Tables.candles(spark, dir)
+    val batch = Tables.candlesFromEvents(spark, dir)
     val matched = emitted.alias("s")
       .join(batch.alias("b"), Seq("symbol", "ts"))
       .filter(col("s.open") === col("b.open") &&
