@@ -70,8 +70,8 @@ object ScaleSmoke {
 
     // Deep-graph CC fixture: `nChains` disjoint chains of `chainLen`
     // consecutive ids — diameter = chainLen, the adversarial case for
-    // min-label propagation (needs diameter/2 materialization rounds)
-    // that large-star/small-star contracts in O(log² n) rounds.
+    // min-label propagation (diameter-many rounds) that
+    // large-star/small-star contracts in O(log² n) rounds.
     val chainLen = 1000L
     val nChainNodes = math.max(100000L, rows / 20L)
     val chainEdges = spark.range(nChainNodes)
@@ -183,11 +183,18 @@ object ScaleSmoke {
       // count is unchanged: nDocs/50)
       stage("dedup_jaccard_docs")(
         Dedup.jaccardPairs(docs, 3, 0.5, maxDf = 50).count()),
-      // connected components over the pair graph (planted pairs are
-      // isolated edges → one propagation round to fixpoint; the stage
-      // still pays the full pair generation + loop machinery)
-      stage("dedup_clusters_docs")(
-        Dedup.nearDupClusters(docs, 3, 0.5, maxDf = 50).count()),
+      // connected components over the pair graph: the planted pairs are
+      // isolated edges, so every planted doc is labeled (one row per
+      // node); union-find on the driver until the pair graph passes one
+      // partition's budget, the star rounds above it
+      stage("dedup_clusters_docs") {
+        val got = Dedup.nearDupClusters(docs, 3, 0.5, maxDf = 50).count()
+        val nodes = 2L * ((nDocs - 2L) / 50L + 1L)
+        require(got == nodes,
+          s"dedup_clusters_docs must label every planted doc: " +
+            s"got $got of $nodes")
+        got
+      },
       stage("dedup_exact_docs")(
         Dedup.exactDuplicates(docs).count()),
       // persisted dedup state: ONE exchange-free projection pass over
@@ -283,11 +290,17 @@ object ScaleSmoke {
       stage("inverted_index_docs")(
         graft.functions.TextAnalysis.invertedIndex(docs, 20).count()),
       // alternating large-star/small-star over diameter-1000 chains —
-      // min-label propagation would need ~500 materialization rounds
-      // here; LSS contracts it in ~log rounds. Expected star edges =
-      // nodes − components.
-      stage("cc_lss_deep")(
-        Dedup.connectedComponents(chainEdges, maxIters = 20).count()),
+      // min-label propagation would need ~1000 hops here; the star
+      // rounds contract it in ~log rounds and run to their fixpoint.
+      // One label per node: every id below nChainNodes, plus
+      // nChainNodes itself when the last chain is partial.
+      stage("cc_lss_deep") {
+        val got = Dedup.connectedComponents(chainEdges).count()
+        val nodes = nChainNodes + (if (nChainNodes % chainLen != 0) 1L else 0L)
+        require(got == nodes,
+          s"cc_lss_deep must label every chain node: got $got of $nodes")
+        got
+      },
       // SRP-LSH over the synthetic vector corpus: 32 decimal-exact
       // hyperplane projections per vector + banded candidate join;
       // planted identical pairs must all surface (nVecs/50)

@@ -608,11 +608,11 @@ object SparkEntry {
     "dedup_keep_best" -> ((s, dir) =>
       Dedup.dedupKeepBest(Tables.table(s, dir, "documents"), 3, 0.5,
         maxDf = 50)),
-    // Same clusters via alternating large-star/small-star — the
-    // O(log² n)-round form that survives deep components (a propagation
-    // loop needs diameter-many rounds); oracle identical to dedup_clusters
+    // The same nearDupClusters call as dedup_clusters (union-find or the
+    // star rounds, picked by the pair graph's size), declared under its
+    // own name for ScaleRatios' exact-factor list; oracle identical
     "dedup_clusters_lss" -> ((s, dir) =>
-      Dedup.nearDupClustersLSS(Tables.table(s, dir, "documents"), 3, 0.5,
+      Dedup.nearDupClusters(Tables.table(s, dir, "documents"), 3, 0.5,
         maxDf = 50)),
     // incremental daily merge: docs with doc_id % 5 == 0 play the new
     // day's delta, the rest the existing corpus whose stored dedup state
@@ -929,6 +929,23 @@ object SparkEntry {
     "embedding_quantize" -> ((s, dir) =>
       Similarity.quantizeEmbeddings(Tables.table(s, dir, "embeddings")))
   )
+
+  /** Shared by `dedup_clusters` and `dedup_clusters_lss`, two names
+    * for one `Dedup.nearDupClusters` call: every doc of the pair graph
+    * labeled by the minimum doc_id it reaches.
+    */
+  private val nearDupClustersSql: String =
+    s"""WITH RECURSIVE
+       |jac AS (${OracleSql.jaccardPairs(0.5, 50)}),
+       |edges AS (
+       |  SELECT doc_a AS src, doc_b AS dst FROM jac
+       |  UNION SELECT doc_b, doc_a FROM jac),
+       |reach(src, dst) AS (
+       |  SELECT src, dst FROM edges
+       |  UNION
+       |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
+       |SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
+       |FROM reach GROUP BY src""".stripMargin
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
@@ -1683,31 +1700,8 @@ object SparkEntry {
     "merge_corpus_day" -> OracleSql.mergeCorpusDay(5, 16, 4, 0.5),
     // the streaming drain must land on the identical classification
     "merge_stream_day" -> OracleSql.mergeCorpusDay(5, 16, 4, 0.5),
-    "dedup_clusters" ->
-      s"""WITH RECURSIVE
-         |jac AS (${OracleSql.jaccardPairs(0.5, 50)}),
-         |edges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM jac
-         |  UNION SELECT doc_b, doc_a FROM jac),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-         |SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
-         |FROM reach GROUP BY src""".stripMargin,
-
-    "dedup_clusters_lss" ->
-      s"""WITH RECURSIVE
-         |jac AS (${OracleSql.jaccardPairs(0.5, 50)}),
-         |edges AS (
-         |  SELECT doc_a AS src, doc_b AS dst FROM jac
-         |  UNION SELECT doc_b, doc_a FROM jac),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-         |SELECT src AS doc_id, least(src, min(dst)) AS cluster_rep
-         |FROM reach GROUP BY src""".stripMargin,
+    "dedup_clusters" -> nearDupClustersSql,
+    "dedup_clusters_lss" -> nearDupClustersSql,
 
     // the dedup_clusters recursive CTE + the text_quality expression,
     // LEFT-joined so singletons are their own cluster; keeper = highest

@@ -241,24 +241,7 @@ object Tables {
     * (symbol, hour) per input partition, not the raw events.
     */
   def candlesFromEvents(spark: SparkSession, sfDir: String): DataFrame =
-    table(spark, sfDir, "events")
-      // a candle is defined over PRICED, TIMED events only — and the
-      // filter is also what keeps the two engines aligned on NULLs:
-      // Spark's min_by returns the (NULL) value at the extremal
-      // event_id while DuckDB's arg_min SKIPS null values, so a
-      // NULL-value row at the bucket's min event_id would silently
-      // diverge open/close; a NULL-ts group would survive batch but
-      // never pass a streaming watermark (stream ≡ batch would break)
-      .filter(col("value").isNotNull && col("ts").isNotNull)
-      .groupBy(
-        col("event_type").as("symbol"),
-        date_trunc("hour", col("ts")).as("ts"))
-      .agg(
-        min_by(col("value"), col("event_id")).as("open"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        max_by(col("value"), col("event_id")).as("close"),
-        count(lit(1)).cast(DoubleType).as("volume"))
+    ohlcv(table(spark, sfDir, "events"), date_trunc("hour", col("ts")).as("ts"))
 
   /** Multi-resolution OHLCV resample — the parameterized form of
     * [[candlesFromEvents]] (reference intent: minute-resolution input
@@ -272,13 +255,31 @@ object Tables {
     */
   def candlesAt(spark: SparkSession, sfDir: String, minutes: Int): DataFrame = {
     val bucketUs = minutes * 60000000L
-    table(spark, sfDir, "events")
-      // same NULL discipline as [[candlesFromEvents]]
-      .filter(col("value").isNotNull && col("ts").isNotNull)
-      .groupBy(
-        col("event_type").as("symbol"),
-        expr(s"timestamp_micros((unix_micros(ts) div $bucketUs) * $bucketUs)")
-          .as("ts"))
+    ohlcv(table(spark, sfDir, "events"),
+      expr(s"timestamp_micros((unix_micros(ts) div $bucketUs) * $bucketUs)")
+        .as("ts"))
+  }
+
+  /** The one OHLCV candle definition over an events frame, shared by
+    * [[candlesFromEvents]], [[candlesAt]] and the streaming
+    * `EventStreams.candleStream`: per (symbol, `bucket`) — `bucket` is
+    * the time-bucket grouping column, carrying its own alias —
+    * open/close are the first/last price by `event_id`, high/low the
+    * extremes, volume the trade count. A `lateness` puts a watermark on
+    * `ts` between the filter and the aggregate (the streaming form).
+    */
+  def ohlcv(events: DataFrame, bucket: Column,
+      lateness: Option[String] = None): DataFrame = {
+    // a candle is defined over PRICED, TIMED events only — and the
+    // filter is also what keeps the two engines aligned on NULLs:
+    // Spark's min_by returns the (NULL) value at the extremal
+    // event_id while DuckDB's arg_min SKIPS null values, so a
+    // NULL-value row at the bucket's min event_id would silently
+    // diverge open/close; a NULL-ts group would survive batch but
+    // never pass a streaming watermark (stream ≡ batch would break)
+    val priced = events.filter(col("value").isNotNull && col("ts").isNotNull)
+    lateness.fold(priced)(priced.withWatermark("ts", _))
+      .groupBy(col("event_type").as("symbol"), bucket)
       .agg(
         min_by(col("value"), col("event_id")).as("open"),
         max(col("value")).as("high"),

@@ -107,22 +107,20 @@ object Backtest {
       cfg.initialBudget + pnl, pnl / cfg.initialBudget * 100.0)
   }
 
-  /** The moving-average rows grouped on the `symbol` column and fed to
-    * `f` in `ts` order. Grouping on the attribute (not a deserialized
-    * key, as `groupByKey` would) is what lets the window's output
-    * partitioning satisfy the grouping without another shuffle.
+  /** The moving-average rows fed to `f` per symbol in `ts` order
+    * ([[TradingOps.foldBySymbol]]): the window's symbol clustering and
+    * sort satisfy the fold without another shuffle.
     */
   private def foldBySymbol[U: Encoder](
       candles: DataFrame, cfg: Config)(
       f: (String, Iterator[MaRow]) => Iterator[U]): Dataset[U] = {
     val spark = candles.sparkSession
     import spark.implicits._
-    TradingOps.movingAverages(candles, cfg.shortN, cfg.longN)
-      .select(col("symbol"), col("ts"), col("close"),
-              col("short_ma"), col("long_ma"))
-      .groupBy(col("symbol"))
-      .as[String, MaRow]
-      .flatMapSortedGroups(col("ts"))(f)
+    TradingOps.foldBySymbol(
+      TradingOps.movingAverages(candles, cfg.shortN, cfg.longN)
+        .select(col("symbol"), col("ts"), col("close"),
+                col("short_ma"), col("long_ma"))
+        .as[MaRow])(f)
   }
 
   private def fold(

@@ -154,7 +154,7 @@ object Dedup {
         .as("p"))
       .select(col("p.doc_a"), col("p.doc_b"), col("p.n_a"), col("p.n_b"))
       // size-compatibility prune: J ≥ τ needs min(|A|,|B|) ≥ τ·max(|A|,|B|)
-      // — drops hopeless pairs map-side BEFORE the count shuffle; the
+      // — drops pairs that cannot pass map-side BEFORE the count shuffle; the
       // final threshold makes this a pure optimization (same result set).
       .filter(least(col("n_a"), col("n_b")).cast("double") >=
         lit(minJaccard) * greatest(col("n_a"), col("n_b")).cast("double"))
@@ -323,17 +323,23 @@ object Dedup {
     verified
   }
 
-  /** Width of the near-dup iterations: sized to the PAIR GRAPH, not the
-    * corpus. Near-dup edges are orders of magnitude fewer than documents,
-    * and each round (label propagation or a large/small-star step) is
-    * join+agg stages over just these edges — running them at corpus
-    * width burns a fixed per-task cost per round for mostly-empty
-    * partitions. ~100k edges per partition, capped at the context's
-    * default parallelism.
+  /** Edges per partition of the pair graph: the width rule of the star
+    * rounds ([[pairGraphWidth]]) and the size up to which
+    * [[nearDupClusters]] resolves components on the driver — a graph that
+    * fits one partition is one the driver can collect.
+    */
+  private val EdgesPerPartition = 100000L
+
+  /** Width of the star rounds: sized to the PAIR GRAPH, not the corpus.
+    * Near-dup edges are orders of magnitude fewer than documents, and
+    * each round is join+agg stages over just these edges — running them
+    * at corpus width burns a fixed per-task cost per round for
+    * mostly-empty partitions. [[EdgesPerPartition]] edges per partition,
+    * capped at the context's default parallelism.
     */
   private def pairGraphWidth(spark: SparkSession, edges: Long): Int =
     math.max(1, math.min(spark.sparkContext.defaultParallelism,
-      (edges / 100000L).toInt + 1))
+      (edges / EdgesPerPartition).toInt + 1))
 
   /** Transitive near-duplicate clusters: connected components over the
     * Jaccard pair graph, each labeled by its minimum doc_id — the step a
@@ -341,56 +347,161 @@ object Dedup {
     * even when A≉C directly). Output: (doc_id, cluster_rep) for every doc
     * that appears in at least one pair.
     *
-    * Algorithm: min-label propagation — each node repeatedly adopts the
-    * smallest label in its closed neighborhood until fixpoint. Iterations
-    * = component diameter (near-dup clusters are shallow); each round is
-    * one self-join + aggregate, and `localCheckpoint` truncates the plan
-    * so lineage doesn't grow per round (the driver-loop-with-actions shape
-    * is the standard Spark iterative-graph pattern; large-star/small-star
-    * is the drop-in upgrade if components ever get deep).
+    * The canonical (hi, lo) pair graph is checkpointed once and counted,
+    * and the edge count picks the algorithm (Shark-style: decided from
+    * the size observed at run time, never from the core count):
+    *  - at most [[EdgesPerPartition]] edges: union-find over the
+    *    collected edges on the driver — exact at any depth, no Spark
+    *    rounds. Near-dup graphs are small and shallow (sf0.1: 256 edges,
+    *    components of at most 4 docs), so this is the common path;
+    *  - above it: the large-star/small-star rounds of
+    *    [[connectedComponents]], which also run to their fixpoint.
+    * Both paths return the same labels.
     */
   def nearDupClusters(docs: DataFrame, n: Int = 3,
-      minJaccard: Double = 0.5, maxIters: Int = 20,
-      maxDf: Long = Long.MaxValue): DataFrame = {
-    val pairs = jaccardPairs(docs, n, minJaccard, maxDf)
-      .select(col("doc_a"), col("doc_b"))
-    val edgesRaw = pairs
-      .union(pairs.select(col("doc_b"), col("doc_a")))
-      .toDF("src", "dst")
+      minJaccard: Double = 0.5, maxDf: Long = Long.MaxValue): DataFrame = {
+    // jaccardPairs emits each pair once with doc_a < doc_b: canonical as is
+    val edges = jaccardPairs(docs, n, minJaccard, maxDf)
+      .select(col("doc_b").as("hi"), col("doc_a").as("lo"))
       .localCheckpoint()
-    // the checkpoint above already materialized the edge count
-    val parts = pairGraphWidth(docs.sparkSession, edgesRaw.count())
-    val edges = edgesRaw.repartition(parts, col("dst")).localCheckpoint()
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("label", col("doc_id"))
+    if (edges.count() <= EdgesPerPartition) unionFind(edges)
+    else starComponents(edges)
+  }
+
+  /** Components of a collectable canonical (hi, lo) edge list: union-find
+    * with path halving, linking the larger root under the smaller so each
+    * root is its component's minimum.
+    */
+  private def unionFind(edges: DataFrame): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x0: Long): Long = {
+      var x = x0
+      while (parent(x) != x) {
+        parent(x) = parent(parent(x))
+        x = parent(x)
+      }
+      x
+    }
+    edges.as[(Long, Long)].collect().foreach { case (hi, lo) =>
+      parent.getOrElseUpdate(hi, hi)
+      parent.getOrElseUpdate(lo, lo)
+      val (a, b) = (find(hi), find(lo))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    parent.keys.toSeq.map(x => (x, find(x))).toDF("doc_id", "cluster_rep")
+  }
+
+  /** Connected components over an undirected edge list via the ALTERNATING
+    * large-star/small-star algorithm (Kiveris et al., "Connected Components
+    * in MapReduce and Beyond", SoCC'14): alternating star operations
+    * contract any graph in O(log² n) rounds regardless of depth (label
+    * propagation needs diameter-many), each round two join+agg stages
+    * over the (shrinking) edge set. This is [[nearDupClusters]]' path for
+    * pair graphs past one partition; called directly it always runs the
+    * rounds, whatever the size.
+    *
+    *  - large-star(u): connect every neighbor v > u to m = min(Γ(u) ∪ {u})
+    *  - small-star(u): connect u and all smaller neighbors to that min
+    *
+    * The fixpoint is a star per component (every node → component min);
+    * stars are stable under both ops, so set-equality of consecutive edge
+    * sets is the exact termination test. The loop runs to that fixpoint
+    * and throws if it passes (⌈log₂(m + 1)⌉ + 2)² rounds for m edges
+    * rather than return unconverged labels. Input: two columns (either
+    * orientation, duplicates fine). Output: (doc_id, cluster_rep) for
+    * every node, roots labeled by themselves.
+    */
+  def connectedComponents(pairs: DataFrame): DataFrame = {
+    val cols = pairs.columns
+    starComponents(
+      canon(pairs.select(col(cols(0)).as("u"), col(cols(1)).as("v")))
+        .localCheckpoint())
+  }
+
+  private def canon(e: DataFrame): DataFrame =
+    e.select(greatest(col("u"), col("v")).as("hi"),
+        least(col("u"), col("v")).as("lo"))
+      .filter(col("hi") =!= col("lo"))
+      .distinct()
+
+  /** The star rounds over a checkpointed canonical (hi, lo) edge list. */
+  private def starComponents(canonical: DataFrame): DataFrame = {
+    // for v > u: (v, min(Γ(u) ∪ {u})) — the min is ≤ u < v, stays canonical
+    def largeStar(e: DataFrame): DataFrame = {
+      val sym = e.select(col("hi").as("u"), col("lo").as("v"))
+        .union(e.select(col("lo").as("u"), col("hi").as("v")))
+      val m = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
+        .select(col("u"), least(col("mn"), col("u")).as("m"))
+      canon(sym.filter(col("v") > col("u")).join(m, Seq("u"))
+        .select(col("v").as("u"), col("m").as("v")))
+    }
+    // connect hi and each smaller neighbor to min(smaller neighbors)
+    def smallStar(e: DataFrame): DataFrame = {
+      val m = e.groupBy(col("hi")).agg(min(col("lo")).as("m"))
+      canon(e.join(m, Seq("hi")).select(col("lo").as("u"), col("m").as("v"))
+        .union(m.select(col("hi").as("u"), col("m").as("v"))))
+    }
+    // Convergence potential Φ(E) = (|E|, Σ_{(hi,lo)∈E} hi + lo), one
+    // metrics-sized aggregate per round. Φ-equality IS set-equality
+    // here — proof (r13; replaces the former per-round count + FULL
+    // ANTI-JOIN `except(edges).isEmpty`, an edge-sized shuffle):
+    // pre-distinct, largeStar maps each canonical edge (hi, lo) to
+    // exactly one output (hi, m(lo)) with m(lo) = min(Γ(lo) ∪ {lo}) ≤
+    // lo, and smallStar maps each hi-group {(hi, u) : u ∈ S} to
+    // {(u, m) : u ∈ S \ {m}} ∪ {(hi, m)} with m = min(S) — pairing
+    // (u, m) against input (hi, u) (sum delta m − hi < 0) and (hi, m)
+    // against itself. (smallStar's raw union also emits one (m, m)
+    // self-row per group — the (hi, m) input edge joining its own group
+    // min — which canon's hi≠lo filter drops BY DESIGN; the 1:1 pairing
+    // above is over the |S| SURVIVING rows, so per-group counts are
+    // still non-increasing. In largeStar the min side is always
+    // strictly below the kept endpoint, so the filter never fires
+    // there.) So in BOTH ops every surviving output edge pairs 1:1 with
+    // one input edge of endpoint-sum ≥ its own, outputs stay canonical,
+    // and distinct() can only DROP rows.
+    // Hence |next| ≤ |mid| ≤ |prev| always; |next| = |prev| forces both
+    // pairings bijective, and Σ-equality then forces every per-edge
+    // delta to zero — both ops were the identity, next = prev. Sums are
+    // exact DECIMAL(38,0) (a wrapped BIGINT Σ could alias two distinct
+    // sets); a null (overflow) sum — impossible below ~10³⁸ total —
+    // reads as NOT converged rather than silently stopping early.
+    def metrics(e: DataFrame): (Long, java.math.BigDecimal) = {
+      val r = e.agg(count(lit(1)),
+        sum(col("hi").cast("decimal(38,0)") +
+          col("lo").cast("decimal(38,0)"))).head()
+      (r.getLong(0), r.getDecimal(1))
+    }
+    var (n, s) = metrics(canonical)
+    val m = n
+    // Kiveris et al. bound the alternating form by O(log² n) rounds for n
+    // nodes, and a component of m edges has at most m + 1 nodes
+    val lg = 64 - java.lang.Long.numberOfLeadingZeros(m)
+    val maxRounds = (lg + 2) * (lg + 2)
+    var edges = canonical
+      .repartition(pairGraphWidth(canonical.sparkSession, m), col("hi"))
       .localCheckpoint()
-    // One min-label propagation hop (lazy — no checkpoint/action here).
-    def hop(ls: DataFrame): DataFrame = {
-      val neighborMin = edges
-        .join(ls.withColumnRenamed("doc_id", "dst").drop("changed"),
-          Seq("dst"))
-        .groupBy(col("src").as("doc_id"))
-        .agg(min(col("label")).as("nlabel"))
-      ls.drop("changed").join(neighborMin, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("label"), coalesce(col("nlabel"), col("label")))
-            .as("label"),
-          coalesce(col("nlabel") < col("label"), lit(false)).as("changed"))
+    var converged = m == 0L
+    var rounds = 0
+    while (!converged) {
+      if (rounds == maxRounds) throw new IllegalStateException(
+        s"connected components: no fixpoint after $rounds star rounds " +
+          s"over $m edges")
+      val next = smallStar(largeStar(edges)).localCheckpoint()
+      val (nn, sn) = metrics(next)
+      converged = nn == n &&
+        (nn == 0L || (sn != null && s != null && sn.compareTo(s) == 0))
+      edges = next
+      n = nn
+      s = sn
+      rounds += 1
     }
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      // TWO hops per materialization round: the expensive part of a round
-      // is the checkpoint + convergence action, not the tiny join, so
-      // doubling the propagation distance per round halves driver-loop
-      // overhead. Convergence = the SECOND hop changed nothing, which is
-      // exactly the fixpoint condition regardless of what hop one did.
-      val updated = hop(hop(labels)).localCheckpoint()
-      converged = updated.filter(col("changed")).isEmpty
-      labels = updated.drop("changed")
-      iter += 1
-    }
-    labels.select(col("doc_id"), col("label").as("cluster_rep"))
+    // at the fixpoint every non-root is the hi of exactly one edge, whose
+    // lo is its root; roots appear only as lo
+    edges.select(col("hi").as("doc_id"), col("lo").as("cluster_rep"))
+      .union(edges.select(col("lo")).distinct()
+        .select(col("lo").as("doc_id"), col("lo").as("cluster_rep")))
   }
 
   /** Line-level dedup (RefinedWeb/CCNet granularity): drop every line
@@ -506,116 +617,6 @@ object Dedup {
   def simhashFingerprints(docs: DataFrame): DataFrame = {
     docs.select(col("doc_id"),
       call_function("simhash64", tokens(col("text"))).as("simhash"))
-  }
-
-  /** Connected components over an undirected edge list via the ALTERNATING
-    * large-star/small-star algorithm (Kiveris et al., "Connected Components
-    * in MapReduce and Beyond", SoCC'14) — the scale path past min-label
-    * propagation: propagation needs diameter-many rounds (a 10⁶-node chain
-    * = 10⁶ joins), while alternating star operations contract any graph in
-    * O(log² n) rounds regardless of depth, each round two join+agg stages
-    * over the (shrinking) edge set.
-    *
-    *  - large-star(u): connect every neighbor v > u to m = min(Γ(u) ∪ {u})
-    *  - small-star(u): connect u and all smaller neighbors to that min
-    *
-    * The fixpoint is a star per component (every node → component min);
-    * stars are stable under both ops, so set-equality of consecutive edge
-    * sets is the exact termination test. Input: two columns (either
-    * orientation, duplicates fine). Output: canonical (hi=node, lo=root)
-    * star edges — roots appear only on the lo side.
-    */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 15): DataFrame = {
-    def canon(e: DataFrame): DataFrame =
-      e.select(greatest(col("u"), col("v")).as("hi"),
-          least(col("u"), col("v")).as("lo"))
-        .filter(col("hi") =!= col("lo"))
-        .distinct()
-    // for v > u: (v, min(Γ(u) ∪ {u})) — the min is ≤ u < v, stays canonical
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.select(col("hi").as("u"), col("lo").as("v"))
-        .union(e.select(col("lo").as("u"), col("hi").as("v")))
-      val m = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      canon(sym.filter(col("v") > col("u")).join(m, Seq("u"))
-        .select(col("v").as("u"), col("m").as("v")))
-    }
-    // connect hi and each smaller neighbor to min(smaller neighbors)
-    def smallStar(e: DataFrame): DataFrame = {
-      val m = e.groupBy(col("hi")).agg(min(col("lo")).as("m"))
-      canon(e.join(m, Seq("hi")).select(col("lo").as("u"), col("m").as("v"))
-        .union(m.select(col("hi").as("u"), col("m").as("v"))))
-    }
-    // Convergence potential Φ(E) = (|E|, Σ_{(hi,lo)∈E} hi + lo), one
-    // metrics-sized aggregate per round. Φ-equality IS set-equality
-    // here — proof (r13; replaces the former per-round count + FULL
-    // ANTI-JOIN `except(edges).isEmpty`, an edge-sized shuffle):
-    // pre-distinct, largeStar maps each canonical edge (hi, lo) to
-    // exactly one output (hi, m(lo)) with m(lo) = min(Γ(lo) ∪ {lo}) ≤
-    // lo, and smallStar maps each hi-group {(hi, u) : u ∈ S} to
-    // {(u, m) : u ∈ S \ {m}} ∪ {(hi, m)} with m = min(S) — pairing
-    // (u, m) against input (hi, u) (sum delta m − hi < 0) and (hi, m)
-    // against itself. (smallStar's raw union also emits one (m, m)
-    // self-row per group — the (hi, m) input edge joining its own group
-    // min — which canon's hi≠lo filter drops BY DESIGN; the 1:1 pairing
-    // above is over the |S| SURVIVING rows, so per-group counts are
-    // still non-increasing. In largeStar the min side is always
-    // strictly below the kept endpoint, so the filter never fires
-    // there.) So in BOTH ops every surviving output edge pairs 1:1 with
-    // one input edge of endpoint-sum ≥ its own, outputs stay canonical,
-    // and distinct() can only DROP rows.
-    // Hence |next| ≤ |mid| ≤ |prev| always; |next| = |prev| forces both
-    // pairings bijective, and Σ-equality then forces every per-edge
-    // delta to zero — both ops were the identity, next = prev. Sums are
-    // exact DECIMAL(38,0) (a wrapped BIGINT Σ could alias two distinct
-    // sets); a null (overflow) sum — impossible below ~10³⁸ total —
-    // reads as NOT converged rather than silently stopping early.
-    def metrics(e: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = e.agg(count(lit(1)),
-        sum(col("hi").cast("decimal(38,0)") +
-          col("lo").cast("decimal(38,0)"))).head()
-      (r.getLong(0), r.getDecimal(1))
-    }
-    val cols = pairs.columns
-    var edges = canon(pairs.select(col(cols(0)).as("u"), col(cols(1)).as("v")))
-      .localCheckpoint()
-    var (n, s) = metrics(edges)
-    val parts = pairGraphWidth(pairs.sparkSession, n)
-    edges = edges.repartition(parts, col("hi")).localCheckpoint()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val next = smallStar(largeStar(edges)).localCheckpoint()
-      val (nn, sn) = metrics(next)
-      converged = nn == n &&
-        (nn == 0L || (sn != null && s != null && sn.compareTo(s) == 0))
-      edges = next
-      n = nn
-      s = sn
-      iter += 1
-    }
-    edges
-  }
-
-  /** [[nearDupClusters]] semantics (same (doc_id, cluster_rep) contract,
-    * same pair graph) computed with the large-star/small-star alternating
-    * algorithm — the form that survives deep components at 100 TB.
-    */
-  def nearDupClustersLSS(docs: DataFrame, n: Int = 3,
-      minJaccard: Double = 0.5, maxIters: Int = 15,
-      maxDf: Long = Long.MaxValue): DataFrame = {
-    val pairs = jaccardPairs(docs, n, minJaccard, maxDf)
-      .select(col("doc_a"), col("doc_b"))
-    val stars = connectedComponents(pairs, maxIters)
-    // Stars: every non-root node is a `hi` with lo = its component root;
-    // roots appear only as `lo`. min() is a no-op at fixpoint, kept so a
-    // maxIters-truncated run still yields one row per node.
-    val nonRoots = stars.groupBy(col("hi").as("doc_id"))
-      .agg(min(col("lo")).as("cluster_rep"))
-    val roots = stars.select(col("lo").as("doc_id")).distinct()
-      .join(nonRoots, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("doc_id").as("cluster_rep"))
-    nonRoots.unionByName(roots)
   }
 
   /** SimHash near-duplicates: pairs at Hamming distance ≤ `maxHamming`,

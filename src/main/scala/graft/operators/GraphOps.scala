@@ -8,7 +8,8 @@ import graft.Tables
 
 /** Iterative graph analytics over the trade graph (customers ↔ suppliers
   * linked by order lines). Complements the dedup module's connected
-  * components (min-label propagation + large-star/small-star): PageRank
+  * components (union-find on the driver while the pair graph fits one
+  * partition, large-star/small-star rounds above it): PageRank
   * is the canonical "ranks need MANY passes" workload, the shape used in
   * LLM-data curation for graph-based source-authority weighting.
   *
@@ -24,8 +25,7 @@ import graft.Tables
   * auto-widened from a footer-cheap |lineitem| peek),
   * `localCheckpoint`ed so the per-iteration joins reuse the materialized
   * graph instead of re-shuffling lineitem; each iteration is one
-  * node-keyed join + one dst-keyed aggregate (two exchanges), the same
-  * per-round cost as the dedup label-propagation loop. Degrees attach
+  * node-keyed join + one dst-keyed aggregate (two exchanges). Degrees attach
   * to the NODE-SIZED rank frame inside the loop (r18 — `rk div deg` is
   * a per-src value; the former edge-sized degree attach paid an |E|-row
   * join and checkpoint for it), and node ids narrow to ints when they

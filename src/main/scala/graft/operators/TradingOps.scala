@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -271,32 +271,43 @@ object TradingOps {
           .as("rsi"))
   }
 
+  /** One ordered pass per symbol: `rows` grouped on the `symbol` column
+    * and fed to `f` in `ts` order — the fold of the backtest and of the
+    * recursive indicators. Grouping on the attribute (not a deserialized
+    * key, as `groupByKey` would) lets a symbol-clustered, (symbol, ts)-
+    * sorted input — a symbol window's output or the bucketed candle
+    * layout — satisfy the fold with no Exchange.
+    */
+  private[operators] def foldBySymbol[T: Encoder, U: Encoder](
+      rows: Dataset[T])(f: (String, Iterator[T]) => Iterator[U]): Dataset[U] =
+    rows.groupBy(col("symbol")).as[String, T](Encoders.STRING, implicitly)
+      .flatMapSortedGroups(col("ts"))(f)
+
   /** Exponential moving average of close per symbol. A TRUE recursion
     * (`ema_i = α·close_i + (1−α)·ema_{i−1}`, seeded with the first
     * close) — unlike the SMA family this is NOT window-expressible, so
-    * it runs as a typed sorted-group fold (`flatMapSortedGroups`, the
-    * backtest machinery): one shuffle on symbol, one ordered pass per
-    * group, O(1) state. The DuckDB oracle replays the identical double
-    * arithmetic in the identical order via a recursive CTE, so emitted
-    * values are bit-exact across engines with no tolerance.
+    * it runs as a typed sorted-group fold ([[foldBySymbol]], the
+    * backtest machinery): one ordered pass per group, O(1) state, and
+    * no shuffle over the bucketed candle layout. The DuckDB oracle
+    * replays the identical double arithmetic in the identical order via
+    * a recursive CTE, so emitted values are bit-exact across engines
+    * with no tolerance.
     */
   def emaClose(candles: DataFrame, n: Int = 14): DataFrame = {
     val spark = candles.sparkSession
     import spark.implicits._
     val alpha = 2.0 / (n + 1)
     val beta = 1.0 - alpha
-    candles.select(col("symbol"), col("ts"), col("close"))
-      .as[(String, java.sql.Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapSortedGroups(col("ts")) { (symbol, rows) =>
-        var ema = 0.0
-        var first = true
-        rows.map { case (_, ts, close) =>
-          ema = if (first) { first = false; close }
-                else alpha * close + beta * ema
-          (symbol, ts, close, ema)
-        }
+    foldBySymbol(candles.select(col("symbol"), col("ts"), col("close"))
+        .as[(String, java.sql.Timestamp, Double)]) { (symbol, rows) =>
+      var ema = 0.0
+      var first = true
+      rows.map { case (_, ts, close) =>
+        ema = if (first) { first = false; close }
+              else alpha * close + beta * ema
+        (symbol, ts, close, ema)
       }
+    }
       .toDF("symbol", "ts", "close", "ema_raw")
       .select(col("symbol"), col("ts"), col("close"),
         round(col("ema_raw"), 6).as("ema"))
@@ -305,9 +316,9 @@ object TradingOps {
   /** MACD(fast, slow, signal): a SECOND-ORDER recursion — the signal line
     * is an EMA of the macd line, which is itself the difference of two
     * EMAs of close. All three accumulators ride the same single ordered
-    * pass per symbol as [[emaClose]] (one shuffle, O(1) state — state
-    * never grows with series length, so a 10-year minute series streams
-    * through unchanged). Seeds: both EMAs = first close, so macd starts
+    * pass per symbol as [[emaClose]] (O(1) state — state never grows
+    * with series length, so a 10-year minute series streams through
+    * unchanged). Seeds: both EMAs = first close, so macd starts
     * at 0 and the signal EMA seeds at 0. The DuckDB oracle replays the
     * identical double updates in the identical order via a recursive CTE
     * carrying (ef, es, esig) — bit-exact, no tolerance.
@@ -319,22 +330,20 @@ object TradingOps {
     val af = 2.0 / (fast + 1); val bf = 1.0 - af
     val as = 2.0 / (slow + 1); val bs = 1.0 - as
     val ag = 2.0 / (signal + 1); val bg = 1.0 - ag
-    candles.select(col("symbol"), col("ts"), col("close"))
-      .as[(String, java.sql.Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapSortedGroups(col("ts")) { (symbol, rows) =>
-        var eF = 0.0; var eS = 0.0; var eSig = 0.0
-        var first = true
-        rows.map { case (_, ts, close) =>
-          if (first) { first = false; eF = close; eS = close; eSig = 0.0 }
-          else {
-            eF = af * close + bf * eF
-            eS = as * close + bs * eS
-            eSig = ag * (eF - eS) + bg * eSig
-          }
-          (symbol, ts, close, eF - eS, eSig)
+    foldBySymbol(candles.select(col("symbol"), col("ts"), col("close"))
+        .as[(String, java.sql.Timestamp, Double)]) { (symbol, rows) =>
+      var eF = 0.0; var eS = 0.0; var eSig = 0.0
+      var first = true
+      rows.map { case (_, ts, close) =>
+        if (first) { first = false; eF = close; eS = close; eSig = 0.0 }
+        else {
+          eF = af * close + bf * eF
+          eS = as * close + bs * eS
+          eSig = ag * (eF - eS) + bg * eSig
         }
+        (symbol, ts, close, eF - eS, eSig)
       }
+    }
       .toDF("symbol", "ts", "close", "macd_raw", "sig_raw")
       .select(col("symbol"), col("ts"), col("close"),
         round(col("macd_raw"), 6).as("macd"),

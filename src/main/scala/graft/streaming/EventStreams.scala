@@ -108,26 +108,13 @@ object EventStreams {
   }
 
   /** Streaming candle construction — the event-time mirror of
-    * [[graft.Tables.candles]]: tumbling 1-hour windows per symbol with a
-    * watermark for late data. Append mode emits each candle exactly once,
-    * when its window falls behind the watermark.
+    * [[graft.Tables.candles]]: the same [[graft.Tables.ohlcv]] definition
+    * over tumbling 1-hour windows per symbol, with a watermark for late
+    * data. Append mode emits each candle exactly once, when its window
+    * falls behind the watermark.
     */
   def candleStream(events: DataFrame, lateness: String = "2 hours"): DataFrame =
-    events
-      // same NULL discipline as [[graft.Tables.candles]] (a NULL-ts row
-      // would be watermark-dropped here anyway — the explicit filter
-      // keeps the batch and stream definitions textually aligned)
-      .filter(col("value").isNotNull && col("ts").isNotNull)
-      .withWatermark("ts", lateness)
-      .groupBy(
-        col("event_type").as("symbol"),
-        window(col("ts"), "1 hour"))
-      .agg(
-        min_by(col("value"), col("event_id")).as("open"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        max_by(col("value"), col("event_id")).as("close"),
-        count(lit(1)).cast(DoubleType).as("volume"))
+    graft.Tables.ohlcv(events, window(col("ts"), "1 hour"), Some(lateness))
       .select(col("symbol"), col("window.start").as("ts"),
         col("open"), col("high"), col("low"), col("close"), col("volume"))
 

@@ -11,6 +11,22 @@ class LlmOpsSpec extends SparkSpec {
   private def docs(texts: (Long, String)*) =
     texts.toDF("doc_id", "text")
 
+  /** Ground truth for the connected-components specs: every node of
+    * `edges` mapped to its component's minimum, by local union-find.
+    */
+  private def unionFindRoots(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    edges.flatMap(e => Seq(e._1, e._2)).distinct.map(x => x -> find(x)).toMap
+  }
+
   test("bm25TopK matches the hand-computed integer formula exactly") {
     // N=4, total_len=14, avgl = 14 div 4 = 3
     val d = docs(
@@ -167,6 +183,33 @@ class LlmOpsSpec extends SparkSpec {
     assert(got == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 5L -> 5L, 6L -> 5L))
   }
 
+  test("nearDupClusters labels every doc of a 60-doc chain (diameter 59) " +
+      "with the chain's minimum") {
+    // doc i = w_i … w_{i+9}: neighbours share 7 of 8 3-shingles (Jaccard
+    // 7/9), docs two apart 6 (6/10), so at 0.7 the pair graph is a path
+    // of diameter 59 — deeper than any fixed round cap would reach
+    val d = docs((0L until 60L).map(i =>
+      i -> (i until i + 10).map(j => s"w$j").mkString(" ")): _*)
+    val got = Dedup.nearDupClusters(d, 3, 0.7)
+      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(got.length == 60)
+    assert(got.toMap == (0L until 60L).map(_ -> 0L).toMap)
+  }
+
+  test("nearDupClusters takes the star rounds past one partition's edge " +
+      "budget and labels every doc the same way") {
+    // 451 copies of one 3-shingle doc: C(451, 2) = 101,475 pairs, above
+    // the 100k edges the driver-side union-find accepts
+    val d = docs((0L to 450L).map(_ -> "x y z") ++
+      Seq(1000L -> "p q r s", 1001L -> "p q r s", 2000L -> "lone doc"): _*)
+    assert(Dedup.jaccardPairs(d, 3, 0.5).count() == 101476L)
+    val got = Dedup.nearDupClusters(d, 3, 0.5)
+      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(got.length == 453)
+    assert(got.toMap ==
+      ((0L to 450L).map(_ -> 0L) ++ Seq(1000L -> 1000L, 1001L -> 1000L)).toMap)
+  }
+
   test("domainMixture: over-represented sources downsample toward the " +
       "per-source allowance, small ones keep everything") {
     // source a: 30 tokens, source b: 6 tokens; budget 20 over 2 sources
@@ -225,35 +268,21 @@ class LlmOpsSpec extends SparkSpec {
 
   test("connectedComponents (large-star/small-star) matches union-find " +
       "on deep and branchy graphs") {
-    // Deep path (diameter 40 — the case propagation is slow on), a
-    // star, a triangle with a pendant, and isolated-pair components.
+    // Deep paths (diameters 39 and 99 — the case propagation is slow
+    // on), a star, a triangle with a pendant, and isolated-pair
+    // components.
     val edges: Seq[(Long, Long)] =
       (1L until 40L).map(i => i -> (i + 1)) ++          // path 1..40
+        (1000L until 1099L).map(i => (i + 1) -> i) ++    // path 1000..1099
         Seq(100L -> 101L, 100L -> 102L, 100L -> 103L) ++ // star
         Seq(200L -> 201L, 201L -> 202L, 202L -> 200L, 202L -> 203L) ++
         Seq(300L -> 301L, 400L -> 401L)
-    // Local union-find ground truth
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val want = edges.flatMap(e => Seq(e._1, e._2)).distinct
-      .map(x => x -> find(x)).toMap
-    val stars = Dedup.connectedComponents(
-      edges.toDF("u", "v").repartition(7))
-    val nonRoots = stars.collect().map(r => r.getLong(0) -> r.getLong(1))
-    val got = want.keys.map(k =>
-      k -> nonRoots.collectFirst { case (h, l) if h == k => l }.getOrElse(k))
-      .toMap
-    assert(got == want)
-    // star shape: every lo is a component root (appears in no hi position)
-    val his = nonRoots.map(_._1).toSet
-    assert(nonRoots.map(_._2).forall(lo => !his.contains(lo)))
+    val want = unionFindRoots(edges)
+    val got = Dedup.connectedComponents(edges.toDF("u", "v").repartition(7))
+      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    // one (node, root) row per node, roots labeled by themselves
+    assert(got.length == want.size)
+    assert(got.toMap == want)
   }
 
   test("connectedComponents Φ-convergence never stops early: random " +
@@ -274,26 +303,18 @@ class LlmOpsSpec extends SparkSpec {
         if (a == b) None else Some(a -> b)
       }
       if (edges.nonEmpty) {
-        val parent = scala.collection.mutable.Map[Long, Long]()
-        def find(x: Long): Long = {
-          val p = parent.getOrElseUpdate(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
-        }
-        edges.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val want = edges.flatMap(e => Seq(e._1, e._2)).distinct
-          .map(x => x -> find(x)).filter { case (x, r) => x != r }.toMap
+        val want = unionFindRoots(edges)
         val got = Dedup.connectedComponents(edges.toDF("u", "v"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(got == want, s"trial $trial (${edges.size} edges): " +
-          s"got $got want $want")
+          .collect().map(r => r.getLong(0) -> r.getLong(1))
+        assert(got.length == want.size && got.toMap == want,
+          s"trial $trial (${edges.size} edges): got ${got.toSeq} want $want")
       }
     }
   }
 
-  test("nearDupClustersLSS agrees with nearDupClusters") {
+  test("connectedComponents agrees with nearDupClusters") {
+    // nearDupClusters takes the union-find path on a graph this small;
+    // connectedComponents always runs the star rounds — same labels
     val d = docs(
       0L -> "a b c d e f g h i j",
       1L -> "a b c d e f x y z w",
@@ -302,8 +323,10 @@ class LlmOpsSpec extends SparkSpec {
       6L -> "m n o p m n o p m n",
       9L -> "lone words without any pair here")
     def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(canon(Dedup.nearDupClustersLSS(d, 3, 0.3)) ==
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).sorted.toSeq
+    val pairs = Dedup.jaccardPairs(d, 3, 0.3)
+      .select(col("doc_a"), col("doc_b"))
+    assert(canon(Dedup.connectedComponents(pairs)) ==
       canon(Dedup.nearDupClusters(d, 3, 0.3)))
   }
 

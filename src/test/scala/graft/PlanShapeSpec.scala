@@ -329,12 +329,13 @@ class PlanShapeSpec extends SparkSpec {
 
   test("the backtest folds and max_drawdown plan ZERO Exchanges over " +
     "the bucketed candle layout") {
-    // the fold groups on the symbol attribute (not a deserialized key),
-    // so the window's symbol clustering and (symbol, ts) sort satisfy it;
-    // the summary is computed inside the fold, so there is no second
-    // groupBy either
+    // the folds group on the symbol attribute (not a deserialized key),
+    // so the window's symbol clustering and (symbol, ts) sort — or the
+    // layout's own, for the EMA folds — satisfy them; the summary is
+    // computed inside the fold, so there is no second groupBy either
     for (n <- Seq("backtest_positions", "backtest_positions_capped",
-        "backtest_summary", "backtest_udaf", "max_drawdown")) {
+        "backtest_summary", "backtest_udaf", "max_drawdown", "ema_close",
+        "macd")) {
       val plan = finalPlan(SparkEntry.queries(n)(spark, dir))
       assert(count(plan, "Exchange ") == 0,
         s"$n must read the candle layout's clustering as is:\n$plan")
